@@ -206,6 +206,42 @@ def test_incremental_capstone_cross_run(spark, staging, tmp_path):
     )
 
 
+def test_hash_id_imm_keys_raw_record_id(spark, staging):
+    """The hashed id_imm is taken from the raw ``cicid`` before the
+    projection: two records that differ only in dropped columns are
+    identical after cleaning yet keep distinct ids."""
+    imm, _, _ = staging
+    twin = [
+        Row(cicid=c, i94port="BOS", arrdate=20583.0, i94addr="MA",
+            depdate=20590.0, i94visa=2.0, biryear=1970.0, gender="F",
+            airline="B6")
+        for c in (10.0, 11.0)
+    ]
+    raw = spark.createDataFrame(twin, schema=imm.schema)
+    rows = capstone.clean_immigration(raw, key_mode="xxhash64").collect()
+    cleaned = [{k: v for k, v in r.asDict().items() if k != "id_imm"} for r in rows]
+    assert len(cleaned) == 2 and cleaned[0] == cleaned[1]
+    ids = {r["id_imm"] for r in rows}
+    assert len(ids) == 2
+    assert ids == {
+        r["id"]
+        for r in raw.select(F.xxhash64("cicid").alias("id")).collect()
+    }
+
+
+def test_hash_id_temp_is_the_group_key_hash(spark, staging):
+    _, temp, air = staging
+    st = capstone.build_state_temperature(
+        capstone.clean_temperature(temp),
+        capstone.clean_airport_codes(air),
+        key_mode="xxhash64",
+    )
+    rows = st.withColumn(
+        "expect", F.xxhash64("dayofmonth", "month", "state")
+    ).collect()
+    assert rows and all(r["id_temp"] == r["expect"] for r in rows)
+
+
 def test_analyst_query(spark, staging):
     imm, temp, air = staging
     final = capstone.clean_immigration(imm)

@@ -781,66 +781,6 @@ def test_dedup_clusters_oracle_rounds_converged(spark, sf_dir):
     compare_frames(spec.fn(spark, sf_dir).toPandas(), r6, "dedup_clusters")
 
 
-def test_minhash_verify_kernels_agree(spark, sf_dir):
-    """The Arrow/numpy intersect kernel (default — measured 1.6x the
-    pure-JVM array_intersect at sf0.1) and the JVM expr twin must be
-    row-identical; validation rejects unknown kernels."""
-    import pytest as _pytest
-
-    from udacity_data_engineering_capstone_project_spark.operators.dedup import (
-        minhash_verified_pairs,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fast = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in minhash_verified_pairs(
-            docs, "doc_id", "text", verify="arrow"
-        ).collect()
-    }
-    twin = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in minhash_verified_pairs(
-            docs, "doc_id", "text", verify="expr"
-        ).collect()
-    }
-    assert fast == twin and len(fast) > 0
-    with _pytest.raises(ValueError, match="arrow"):
-        minhash_verified_pairs(docs, "doc_id", "text", verify="nope")
-
-
-def test_minhash_verified_pairs_lazy_plan_only(spark, sf_dir):
-    """r9 review fix: ``lazy=True`` is the plan-only escape hatch —
-    construction runs ZERO jobs (no signature/screen checkpoints),
-    and executing the lazy plan still matches the eager form
-    row-for-row (it relies on AQE runtime broadcast instead of the
-    plan-time hint)."""
-    from udacity_data_engineering_capstone_project_spark.operators.dedup import (
-        minhash_verified_pairs,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("lazy-mh-construct", "plan-only probe")
-        lazy_plan = minhash_verified_pairs(
-            docs, "doc_id", "text", threshold=0.8, lazy=True
-        )
-        assert sc.statusTracker().getJobIdsForGroup("lazy-mh-construct") == []
-        sc.setJobGroup("eager-mh-construct", "eager twin")
-        eager_plan = minhash_verified_pairs(
-            docs, "doc_id", "text", threshold=0.8
-        )
-        assert (
-            sc.statusTracker().getJobIdsForGroup("eager-mh-construct") != []
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    got = {(r.id_a, r.id_b): r.jaccard for r in lazy_plan.collect()}
-    want = {(r.id_a, r.id_b): r.jaccard for r in eager_plan.collect()}
-    assert got == want and len(got) > 0
-
-
 def test_contamination_screen_matches_numpy_replay(spark):
     """contamination_screen (r11) vs a full numpy replay of the SAME
     splitmix64 plane family: bucket assignment, candidate collision,

@@ -1,7 +1,5 @@
 from udacity_data_engineering_capstone_project_spark.operators.cleaning import (
     cast_columns,
-    drop_nulls,
-    fill_nulls,
     fix_mojibake,
     normalize_domain,
     normalize_unicode,
@@ -78,8 +76,6 @@ __all__ = [
     "optimal_num_bits",
     "optimal_num_hashes",
     "cast_columns",
-    "drop_nulls",
-    "fill_nulls",
     "normalize_domain",
     "normalize_unicode",
     "argmax_join",

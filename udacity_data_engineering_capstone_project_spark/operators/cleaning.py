@@ -34,16 +34,6 @@ def normalize_domain(
     return df.withColumn(out, normalized).fillna(other, subset=[out])
 
 
-def fill_nulls(df: DataFrame, value, subset: Sequence[str] | None = None) -> DataFrame:
-    """Null fill per column subset (reference `etl.py:109-110,160`)."""
-    return df.fillna(value, subset=list(subset) if subset else None)
-
-
-def drop_nulls(df: DataFrame, subset: Sequence[str] | None = None, how: str = "any") -> DataFrame:
-    """Drop rows with nulls (reference `etl.py:137` uses bare dropna())."""
-    return df.dropna(how=how, subset=list(subset) if subset else None)
-
-
 def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
     """Cast columns by name -> Spark type string (reference casts CSV
     strings to double, `etl.py:135-136,156-157`)."""

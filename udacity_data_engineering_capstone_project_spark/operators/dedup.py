@@ -26,8 +26,6 @@ from __future__ import annotations
 import time
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,12 +35,6 @@ from udacity_data_engineering_capstone_project_spark.functions.text import (
     tokens,
 )
 from udacity_data_engineering_capstone_project_spark.operators.similarity import cosine
-
-
-def drop_exact_duplicates(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Full-row (or column-subset) exact dedup (reference `etl.py:111`).
-    One hash-shuffle on all/subset columns; AQE coalesces output."""
-    return df.dropDuplicates(list(subset)) if subset else df.dropDuplicates()
 
 
 def _ensure_parallelism(df: DataFrame, key: str) -> DataFrame:
@@ -263,8 +255,6 @@ def minhash_verified_pairs(
     bands: int = 8,
     threshold: float = 0.8,
     est_slack: float | None = None,
-    verify: str = "expr",
-    lazy: bool = False,
 ) -> DataFrame:
     """MinHash-LSH candidates verified by EXACT shingle Jaccard — the
     standard THREE-phase near-dup pipeline: banded candidate
@@ -295,44 +285,28 @@ def minhash_verified_pairs(
 
     Verification compares DISTINCT xxhash64 shingle-hash SETS —
     O(pairs) rows through the join instead of the O(pairs x
-    shingles_per_doc) row fan-out of a shingle equi-join. Two
-    equal-output kernels (cross-pinned by
-    test_minhash_verify_kernels_agree): ``verify="expr"`` (default
-    since r14) keeps the whole verify inside the JVM with
-    ``array_intersect`` — re-measured this round at 2.28 s vs 2.81 s
-    full-query for the Arrow kernel (and 0.38 vs 0.67-0.75 s on a
-    materialized verify input): the numpy kernel's per-pair math is
-    cheap, but every pair's TWO shingle-hash arrays must cross the
-    JVM->Arrow->Python boundary to reach it (guide §4.1 — you cannot
-    remove that cost, only avoid it), which at ~300 longs x 2 x 107k
-    screened pairs outweighs the hash-set build ``array_intersect``
-    pays per row. ``verify="arrow"`` (the r12-r13 default) is kept as
-    the cross-pinned twin. Hash-set
-    Jaccard == string-set Jaccard absent 64-bit collisions
-    (P ~ shingles^2 / 2^64 per pair; the DuckDB oracle recomputes
-    from raw text, so a collision would fail the driver hash).
+    shingles_per_doc) row fan-out of a shingle equi-join — with
+    ``array_intersect`` inside the JVM. It beat an Arrow/numpy
+    intersect kernel at 2.28 s vs 2.81 s full-query on the sf0.1
+    bench: every pair's two shingle-hash arrays would otherwise cross
+    the JVM->Arrow->Python boundary. Hash-set Jaccard == string-set
+    Jaccard absent 64-bit collisions (P ~ shingles^2 / 2^64 per pair;
+    the DuckDB oracle recomputes from raw text, so a collision would
+    fail the driver hash).
 
-    NOTE: construction is EAGER by default — building the returned
-    plan runs the signature and candidate-screen jobs (two
-    localCheckpoints). This is load-bearing, not incidental: the
-    size-gated broadcast of the screened pair set needs block-manager
-    TRUTH at plan time (stats estimates through the banding self-join
-    are garbage), and the screen would run exactly once at execution
-    anyway. ``lazy=True`` (r9, review finding) is the plan-only escape
-    hatch: no job runs at construction — at the cost of the broadcast
-    gating (the pair set stays unhinted, so the verify joins rely on
-    AQE's runtime broadcast conversion instead of a plan-time hint).
-    Use it for plan inspection / lint sweeps; keep the eager default
-    for execution.
+    NOTE: construction is EAGER — building the returned plan runs the
+    signature and candidate-screen jobs (two localCheckpoints). This is
+    load-bearing: the size-gated broadcast of the screened pair set
+    needs block-manager TRUTH at plan time (stats estimates through the
+    banding self-join are garbage), and the screen would run exactly
+    once at execution anyway.
     """
-    if verify not in ("arrow", "expr"):
-        raise ValueError(f"verify must be 'arrow' or 'expr', got {verify!r}")
     if est_slack is None:
         est_slack = 2.0 * (threshold * (1.0 - threshold) / num_hashes) ** 0.5
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    if not lazy:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = minhash_signatures(
+        df, id_col, text_col, num_hashes, shingle_k
+    ).localCheckpoint(eager=True)
     # screen BEFORE the pair-dedup (est is identical for every banded
     # copy — the minhash_dedup_pairs lesson), then dedup survivors
     cand = lsh_candidate_pairs(
@@ -354,15 +328,11 @@ def minhash_verified_pairs(
     # the pair docs by a broadcast SEMI join before the final
     # pairs-proportional join — the arrays that move are bounded by
     # the candidate count, never the corpus (VERDICT r7 #6).
-    if lazy:
-        bids = ids  # plan-only: no checkpoint job, no plan-time hint
-    else:
-        ids = ids.localCheckpoint(eager=True)
-        from udacity_data_engineering_capstone_project_spark.operators.relational import (
-            maybe_broadcast,
-        )
+    from udacity_data_engineering_capstone_project_spark.operators.relational import (
+        maybe_broadcast,
+    )
 
-        bids = maybe_broadcast(ids)
+    bids = maybe_broadcast(ids.localCheckpoint(eager=True))
     # spread the shingle-array build: it is now the STREAM side of the
     # verify joins (the pair set is the build side), so a single-split
     # local file would otherwise run the whole verify stage on one core
@@ -385,28 +355,10 @@ def minhash_verified_pairs(
     # is shared with join 1 via ReusedExchange — no extra job)
     b_small = b.join(bids, "id_b", "left_semi")
     joined = bids.join(a, "id_a").join(b_small, "id_b")
-    if verify == "arrow":
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("long")
-        def _isize(ha, hb):
-            import numpy as np
-            import pandas as pd
-
-            out = np.empty(len(ha), dtype=np.int64)
-            for i, (x, y) in enumerate(zip(ha, hb)):
-                out[i] = np.intersect1d(
-                    np.asarray(x), np.asarray(y), assume_unique=True
-                ).size
-            return pd.Series(out)
-
-        inter_col = _isize(F.col("__ha"), F.col("__hb"))
-    else:
-        inter_col = F.size(F.array_intersect(F.col("__ha"), F.col("__hb")))
     staged = joined.select(
         "id_a",
         "id_b",
-        inter_col.alias("__i"),
+        F.size(F.array_intersect("__ha", "__hb")).alias("__i"),
         F.size("__ha").alias("__na"),
         F.size("__hb").alias("__nb"),
     )
@@ -607,9 +559,8 @@ def connected_components(
 
     ``on_round``: optional callback ``(round_idx, wall_seconds,
     label_sum)`` fired after each propagation round — zero extra jobs
-    (the label_sum IS the convergence monitor's aggregate); the
-    scale probe (tools/scale_probe_cc.py) uses it to price per-round
-    shuffle cost against component-shape mixes.
+    (the label_sum IS the convergence monitor's aggregate); use it to
+    price per-round shuffle cost against component-shape mixes.
     """
     # Iterative algorithms MUST truncate lineage every round:
     # each pointer-jumping step references the previous labels plan
@@ -1273,103 +1224,11 @@ def remove_duplicated_segments(
 # ---------------------------------------------------------------------------
 # Exact repeated-substring spans (ExactSubstr-style)
 
-# Rabin-Karp double rolling hash: two independent polynomial hashes
-# over 31-bit prime moduli, so every intermediate product stays below
-# 2^62 — exact in int64 arithmetic on any engine, no unsigned wraparound
-# needed (Spark 4 runs ANSI arithmetic). The (H1, H2) pair packs
-# injectively into one BIGINT H1 * M2 + H2 < 2^62; a cross-window
-# collision needs BOTH hashes to collide (~2^-62 per pair — for 10M
-# windows that is ~1e-5 expected corpus-wide, vs md5's ~0 but at
-# min_tokens x the hashing cost).
-_RK_M1, _RK_B1 = 2147483647, 1000003
-_RK_M2, _RK_B2 = 2147483629, 1000033
-_RK_I1 = pow(_RK_B1, _RK_M1 - 2, _RK_M1)  # B1^-1 mod M1
-_RK_I2 = pow(_RK_B2, _RK_M2 - 2, _RK_M2)
-
-_RK_POW_CACHE: dict = {}
-
-
-def _rk_pow_table(base: int, mod: int, size: int):
-    """int64 table of base^i mod M for i < size, built by block
-    doubling (O(log n) vectorized numpy ops, no per-element Python
-    loop) and cached per executor, grown geometrically."""
-    t = _RK_POW_CACHE.get((base, mod))
-    if t is None or len(t) < size:
-        t = np.array([1], dtype=np.int64)
-        while len(t) < size:
-            mult = int(t[-1]) * base % mod
-            t = np.concatenate([t, (t * mult) % mod])
-        _RK_POW_CACHE[(base, mod)] = t
-    return t
-
-
-def _rolling_fingerprints_udf(min_tokens: int):
-    """Arrow-batched kernel: per-token hashes (array<long>) -> one
-    packed Rabin-Karp fingerprint per consecutive ``min_tokens``
-    window (array<long>, index i = window starting at token i+1).
-
-    O(tokens) per document: position-weighted terms g_i = h_i * B^i
-    mod M, one cumulative sum, one sliding-window difference, one
-    inverse-power renormalization (S_p * B^-p) so the same token
-    sequence fingerprints identically at any offset in any document.
-    All values stay below 2^31 so every product fits int64 exactly.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def _fp(tok_hashes: pd.Series) -> pd.Series:
-        L = min_tokens
-        empty = np.empty(0, dtype=np.int64)
-        arrs = [
-            empty if v is None else np.asarray(v, dtype=np.int64)
-            for v in tok_hashes
-        ]
-        if not arrs:
-            return pd.Series([], dtype=object)
-        lens = np.array([len(a) for a in arrs], dtype=np.int64)
-        flat = np.concatenate(arrs) if len(arrs) > 1 else arrs[0]
-        doc_start = np.concatenate(
-            [np.zeros(1, dtype=np.int64), np.cumsum(lens)[:-1]]
-        )
-        # within-doc token positions, flat across the whole batch —
-        # one vectorized pass instead of a Python loop per document
-        pos = np.arange(len(flat), dtype=np.int64) - np.repeat(doc_start, lens)
-        m = np.maximum(lens - L + 1, 0)  # window count per doc
-        total_w = int(m.sum())
-        if total_w == 0:
-            return pd.Series([empty] * len(arrs))
-        w_start = np.concatenate(
-            [np.zeros(1, dtype=np.int64), np.cumsum(m)[:-1]]
-        )
-        # within-doc window index j and its flat token index
-        wpos = np.arange(total_w, dtype=np.int64) - np.repeat(w_start, m)
-        widx = np.repeat(doc_start, m) + wpos
-        max_n = int(lens.max())
-        packed = None
-        for b, binv, mod in (
-            (_RK_B1, _RK_I1, _RK_M1),
-            (_RK_B2, _RK_I2, _RK_M2),
-        ):
-            pw = _rk_pow_table(b, mod, max_n)
-            ipw = _rk_pow_table(binv, mod, max_n)
-            g = (flat % mod) * pw[pos] % mod
-            cs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(g)])
-            # windows never cross documents (j <= len - L), so the
-            # global cumsum difference stays within one doc's terms
-            s = (cs[widx + L] - cs[widx]) % mod
-            hh = s * ipw[wpos] % mod
-            packed = hh if packed is None else packed * _RK_M2 + hh
-        return pd.Series(np.split(packed, np.cumsum(m)[:-1]))
-
-    return _fp
-
-
 def duplicated_spans(
     df: DataFrame,
     id_col: str,
     text_col: str,
     min_tokens: int = 20,
-    rolling: bool = False,
 ) -> DataFrame:
     """Maximal token spans whose ``min_tokens``-token windows recur
     ANYWHERE in the corpus (other documents or elsewhere in the same
@@ -1387,32 +1246,17 @@ def duplicated_spans(
     (gap <= min_tokens) merge into maximal spans per document via one
     per-doc sort (classic gaps-and-islands).
 
-    Two fingerprint kernels, measured head-to-head at sf0.1 (warm,
-    local[32]):
-
-    - default (rolling=False): ``xxhash64(slice(tokens, p, L))`` per
-      window, entirely in whole-stage codegen. Nominally O(tokens*L)
-      token-hashing, but each hash is native word-at-a-time xxhash —
-      it replaced the original ``md5(concat_ws(...))`` (string
-      materialization + crypto hash per window; 1.06 s) at 0.87 s
-      median, and stays ahead of the Arrow kernel even at L=40
-      (0.68 s vs 0.98 s).
-    - rolling=True: double Rabin-Karp over per-token xxhash64 values —
-      tokens hash once JVM-side, then an Arrow-batched numpy kernel
-      rolls all windows in true O(tokens) (position-weighted terms,
-      one cumsum, one sliding difference, inverse-power
-      renormalization; all mod 31-bit primes so int64 stays exact).
-      The asymptotic win is real but the Arrow round trip (8 B/token
-      out, 8 B/window back, Python worker hop) costs a flat ~0.3 s at
-      sf0.1 that the native path never pays; it only wins for very
-      wide windows (L >> 40) over long documents.
+    Each window's fingerprint is ``xxhash64(slice(tokens, p, L))``,
+    entirely in whole-stage codegen: nominally O(tokens*L) hashing, but
+    native word-at-a-time xxhash beat an Arrow-batched O(tokens)
+    Rabin-Karp kernel even at L=40 (0.68 s vs 0.98 s at sf0.1), since
+    the Arrow round trip costs a flat ~0.3 s the native path never pays.
 
     Fingerprints are engine-internal: the DuckDB parity oracle
     fingerprints windows its own way (md5 of the window text) and must
     produce identical SPANS, so a hash collision in either engine is
     caught, not hidden (64-bit window hashes: ~1e-7 expected corpus-
-    wide collisions at 10M windows; the rolling pair packs two 31-bit
-    hashes, same order).
+    wide collisions at 10M windows).
 
     Cost at 100 TB: the fingerprint shuffle is linear in corpus
     TOKENS (each token starts one window) — inherent to the problem,
@@ -1424,39 +1268,26 @@ def duplicated_spans(
     inclusive token positions of each maximal duplicated span.
     """
     toks = tokens(F.col(text_col))
-    if rolling:
-        tok_hashes = F.transform(toks, lambda t: F.xxhash64(t))
-        fp = _rolling_fingerprints_udf(min_tokens)
-        wins = (
-            _ensure_parallelism(df, id_col)
-            .select(
-                F.col(id_col), F.posexplode(fp(tok_hashes)).alias("pos", "g")
-            )
-            .select(id_col, (F.col("pos") + 1).alias("p"), "g")
+    n = F.size(toks)
+    starts = F.when(
+        n >= min_tokens, F.sequence(F.lit(1), n - F.lit(min_tokens - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    wins = (
+        _ensure_parallelism(df, id_col)
+        .select(
+            F.col(id_col),
+            F.explode(
+                F.transform(
+                    starts,
+                    lambda p: F.struct(
+                        p.alias("p"),
+                        F.xxhash64(F.slice(toks, p, min_tokens)).alias("g"),
+                    ),
+                )
+            ).alias("w"),
         )
-    else:
-        n = F.size(toks)
-        starts = F.when(
-            n >= min_tokens, F.sequence(F.lit(1), n - F.lit(min_tokens - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        wins = (
-            _ensure_parallelism(df, id_col)
-            .select(
-                F.col(id_col),
-                F.explode(
-                    F.transform(
-                        starts,
-                        lambda p: F.struct(
-                            p.alias("p"),
-                            F.xxhash64(F.slice(toks, p, min_tokens)).alias(
-                                "g"
-                            ),
-                        ),
-                    )
-                ).alias("w"),
-            )
-            .select(id_col, "w.p", "w.g")
-        )
+        .select(id_col, "w.p", "w.g")
+    )
     recurring = (
         wins.groupBy("g")
         .agg(F.count(F.lit(1)).alias("__c"))

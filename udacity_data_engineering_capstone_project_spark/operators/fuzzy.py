@@ -87,7 +87,6 @@ def fuzzy_pairs(
     id_col: str,
     text_col: str,
     max_distance: int = 1,
-    lazy: bool = False,
 ) -> DataFrame:
     """All pairs of rows whose ``text_col`` values are within
     Levenshtein distance ``max_distance`` — exact precision AND exact
@@ -121,8 +120,7 @@ def fuzzy_pairs(
     self-join, so it is spread to full parallelism and
     localCheckpoint'ed ONCE — without the barrier the self-join
     recomputes it twice (measured 3.8 s -> 1.3 s at sf0.1;
-    BASELINE.md r9 continuation). ``lazy=True`` skips the spread +
-    checkpoint for plan-only callers (zero jobs at construction).
+    BASELINE.md r9 continuation).
 
     Checkpoint durability (ADVICE r9, refined r10): ``localCheckpoint``
     stores blocks on executors only — on a cluster, losing an executor
@@ -136,34 +134,32 @@ def fuzzy_pairs(
     reasons). Cleanup caveat: Spark deletes reliable checkpoint files
     only when ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
     (default false) — a long-running cluster job calling fuzzy_pairs
-    per batch should set that flag (or pass ``lazy=True`` and manage
-    materialization itself) to avoid unbounded checkpoint-dir growth.
+    per batch should set that flag to avoid unbounded checkpoint-dir
+    growth.
     """
     if max_distance not in (1, 2):
         raise ValueError(
             f"max_distance must be 1 or 2 (keys grow O(L^k)), got {max_distance}"
         )
-    src = df if lazy else _ensure_parallelism(df, id_col)
     keys = (
-        src.select(
+        _ensure_parallelism(df, id_col).select(
             F.col(id_col).alias("__id"),
             deletion_key_hashes(text_col, max_distance).alias("__ks"),
         )
         .select("__id", F.explode("__ks").alias("__k"))
     )
-    if not lazy:
-        sc = df.sparkSession.sparkContext
-        # "local"/"local[...]" = single JVM, no executor to lose ->
-        # localCheckpoint is safe and an FS round-trip is pure cost.
-        # Anything else — including local-cluster[...], which DOES run
-        # separate executor JVMs whose localCheckpoint blocks can be
-        # lost (ADVICE r10) — takes the reliable .checkpoint() path
-        # when a checkpoint dir is configured.
-        single_jvm = sc.master == "local" or sc.master.startswith("local[")
-        if sc.getCheckpointDir() is not None and not single_jvm:
-            keys = keys.checkpoint(eager=True)
-        else:
-            keys = keys.localCheckpoint(eager=True)
+    sc = df.sparkSession.sparkContext
+    # "local"/"local[...]" = single JVM, no executor to lose ->
+    # localCheckpoint is safe and an FS round-trip is pure cost.
+    # Anything else — including local-cluster[...], which DOES run
+    # separate executor JVMs whose localCheckpoint blocks can be
+    # lost (ADVICE r10) — takes the reliable .checkpoint() path
+    # when a checkpoint dir is configured.
+    single_jvm = sc.master == "local" or sc.master.startswith("local[")
+    if sc.getCheckpointDir() is not None and not single_jvm:
+        keys = keys.checkpoint(eager=True)
+    else:
+        keys = keys.localCheckpoint(eager=True)
     a, b = keys.alias("a"), keys.alias("b")
     cand = (
         a.join(

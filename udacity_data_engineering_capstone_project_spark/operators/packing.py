@@ -18,7 +18,7 @@ assignment is reproducible run-to-run regardless of cluster layout.
 
 In-bucket cost: the textbook FFD scan is O(items x open packs) — at
 ~8 items/pack that is quadratic in the bucket size and croaks past
-~1e5 items (measured: tools/scale_probe_packing.py). Large buckets
+~1e5 items (measured; BASELINE.md, sequence-packing probe). Large buckets
 therefore run first-fit over a MAX SEGMENT TREE of pack capacities
 (descend left-first toward the smallest index whose subtree max >=
 item size): O(items log packs), identical assignment (the tree

@@ -358,8 +358,8 @@ def salted_join(
     buckets (a value-derived hash would send them to a single salt).
     Deterministic for a fixed input layout.
 
-    When to use — measured, not assumed
-    (tools/scale_probe_salted_join.py): for a single-hot-key SMJ,
+    When to use — measured, not assumed (BASELINE.md, salted-join
+    probe): for a single-hot-key SMJ,
     AQE's skew-join split subdivides the skewed partition by
     map-output ranges and BEATS salting (5.4 s vs 14.4 s on a 20M-row
     50%-hot probe; the x``salts`` right-side replication costs more

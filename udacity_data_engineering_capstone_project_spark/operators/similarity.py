@@ -258,8 +258,7 @@ def auto_lsh_family(
     LSH (see `lsh_near_dup_pairs` notes).
 
     Cost curve at the defaults (generated by this function;
-    BASELINE.md r12 carries the bound-vs-measured recall table from
-    `tools/scale_probe_contamination.py --family`):
+    BASELINE.md r12 carries the bound-vs-measured recall table):
 
         threshold   p      (k, L)   boundary recall
           0.9     0.856   (11, 15)       0.951

@@ -1,29 +1,21 @@
-"""Custom stateful operators via Arrow-batched pandas groups.
+"""Stateful per-key recurrences expressed as relational algebra.
 
-Demonstrates the escape hatch for semantics the built-in operators
-genuinely cannot express: sequential per-key recurrences. The example
-is an exponential time-decay activity score,
+The example is an exponential time-decay activity score,
 
     s_i = value_i + s_{i-1} * exp(-lambda * dt_i),
 
 whose naive closed form (prefix sums of v_j * exp(lambda * t_j))
-overflows float64 for realistic time ranges — so a per-group scan is
-the numerically correct implementation.
-
-Shape: `groupBy(key).applyInPandas(...)` — one shuffle on the key,
-then each group processed as a pandas frame inside an Arrow batch.
-Groups must fit in executor memory (fine for per-user event history;
-salt the key if a group can exceed it).
+overflows float64 for realistic time ranges. Anchored at each key's
+latest event instead, every exponent is non-positive, so the final
+score is one window max plus one aggregation — no per-group Python.
 """
 
 from __future__ import annotations
 
 import math
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def decay_score(
@@ -33,60 +25,23 @@ def decay_score(
     value_col: str,
     half_life_seconds: float = 3600.0,
     round_dp: int = 6,
-    method: str = "closed",
 ) -> DataFrame:
     """Final exponential-decay score per key after replaying its events
     in time order. Output: (key, n_events, final_score rounded to
     ``round_dp`` decimals).
 
     THIS recurrence telescopes: sum(v_i * exp(-lam*(t_max - t_i)))
-    with only non-positive exponents — no overflow — so the default
-    ``method='closed'`` evaluates it as pure relational algebra (one
-    window max + one aggregation, whole-stage codegen; measured 0.14 s
-    vs 3.8 s at sf0.1). ``method='scan'`` keeps the applyInPandas
-    per-key sequential replay — the shape that remains NECESSARY for
-    recurrences a closed form cannot rescue (clamped/saturating state,
-    per-step conditionals, regime switches); it exists as the
-    general-path exhibit and the cross-check that the algebraic
-    rewrite is faithful (the two agree to ~1e-13 relative; pinned in
-    tests). Its cost is applyInPandas itself — one pandas frame per
-    key (~2 ms/group) — not the Python arithmetic.
+    with only non-positive exponents — no overflow — so it is evaluated
+    as pure relational algebra (one window max + one aggregation,
+    whole-stage codegen): 0.14 s vs 3.8 s for an applyInPandas per-key
+    replay at sf0.1.
 
     Cross-engine graders should round coarsely enough that no score
     sits near a rounding boundary (the language-id libm lesson):
     round_dp=3 carries >1000x measured headroom on the graded
     testdata (pinned by test_decay_score_rounding_headroom), while
     round_dp=6 is for same-libm comparisons only."""
-    if method not in ("closed", "scan"):
-        raise ValueError(f"method must be 'closed' or 'scan', got {method!r}")
     lam = math.log(2.0) / half_life_seconds
-    schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("n_events", LongType()),
-            StructField("final_score", DoubleType()),
-        ]
-    )
-
-    def _scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
-        ts = pdf[ts_col].astype("int64").to_numpy()  # epoch us
-        vals = pdf[value_col].to_numpy()
-        score = 0.0
-        prev = None
-        for t, v in zip(ts, vals):
-            if prev is not None:
-                score *= math.exp(-lam * (t - prev) / 1_000_000.0)
-            score += float(v)
-            prev = t
-        return pd.DataFrame(
-            {
-                key_col: [int(pdf[key_col].iloc[0])],
-                "n_events": [len(pdf)],
-                "final_score": [round(score, round_dp)],
-            }
-        )
-
     # Wall-clock epoch-us via NTZ arithmetic — session-tz-independent
     # (an instant cast would shift non-uniformly across DST boundaries).
     ts_expr = (
@@ -97,12 +52,8 @@ def decay_score(
         else F.col(ts_col)
     )
     prepared = df.select(F.col(key_col), ts_expr, F.col(value_col))
-    if method == "scan":
-        return prepared.groupBy(key_col).applyInPandas(_scan, schema)
-    # closed form: one window max (shuffles on the key once) + one
+    # one window max (shuffles on the key once) + one
     # partial-aggregated sum of v * exp(-lam * age) — all codegen
-    from pyspark.sql import Window
-
     tmax = F.max(ts_col).over(Window.partitionBy(key_col))
     age_s = (tmax - F.col(ts_col)) / F.lit(1_000_000.0)
     return (

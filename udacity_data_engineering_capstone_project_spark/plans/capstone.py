@@ -28,6 +28,7 @@ from udacity_data_engineering_capstone_project_spark.functions.dates import (
     sas_date_to_date,
     with_date_parts,
 )
+from udacity_data_engineering_capstone_project_spark.functions.keys import add_surrogate_key
 from udacity_data_engineering_capstone_project_spark.functions.strings import (
     extract_decimal,
     printf_round0,
@@ -59,7 +60,12 @@ def clean_immigration(raw: DataFrame, key_mode: str = "monotonic") -> DataFrame:
     """Immigration staging -> cleaned/conformed (reference
     `read_immigration_staging`, `etl.py:89-118`): SAS-date decode,
     date parts, state normalization, null fills, full-row dedup,
-    projection, tourism filter (i94visa == 2), surrogate id."""
+    projection, tourism filter (i94visa == 2), surrogate id.
+
+    ``key_mode="monotonic"`` (reference parity) numbers the cleaned
+    rows; any other value (``"xxhash64"``) hashes the raw record id
+    ``cicid`` BEFORE the projection, so rows that differ only in
+    dropped columns keep distinct ids."""
     cleaned = (
         raw.withColumn("arrdate_dt", sas_date_to_date("arrdate"))
         .withColumn("depdate_dt", sas_date_to_date("depdate"))
@@ -68,22 +74,25 @@ def clean_immigration(raw: DataFrame, key_mode: str = "monotonic") -> DataFrame:
     cleaned = normalize_domain(
         cleaned.withColumn("state", F.col("i94addr")), "state", VALID_US_STATES
     )
+    keep = [
+        "i94port", "biryear", "gender", "airline", "i94visa",
+        "arrdate_dt", "depdate_dt", "arrdate_dayofmonth",
+        "arrdate_month", "arrdate_year", "state",
+    ]
+    if key_mode != "monotonic":
+        cleaned = add_surrogate_key(
+            cleaned, "id_imm", mode="hash", natural_key=["cicid"]
+        )
+        keep.append("id_imm")
     cleaned = (
         cleaned.fillna("unknown", subset=["gender"])
         .dropDuplicates()
-        .select(
-            "i94port", "biryear", "gender", "airline", "i94visa",
-            "arrdate_dt", "depdate_dt", "arrdate_dayofmonth",
-            "arrdate_month", "arrdate_year", "state",
-        )
+        .select(*keep)
         .filter(F.col("i94visa") == 2)
     )
     if key_mode == "monotonic":
-        return cleaned.withColumn("id_imm", F.monotonically_increasing_id())
-    return cleaned.withColumn(
-        "id_imm",
-        F.xxhash64(*[F.col(c) for c in cleaned.columns]),
-    )
+        return add_surrogate_key(cleaned, "id_imm", mode="monotonic")
+    return cleaned
 
 
 def clean_temperature(raw: DataFrame) -> DataFrame:
@@ -142,6 +151,10 @@ def build_state_temperature(
     breaks count ties deterministically (state asc) while the reference
     join KEEPS ties — at tie sites the two formulations differ, matching
     SURVEY.md §4's documented divergence.
+
+    ``key_mode="monotonic"`` (reference parity) numbers the output
+    rows; any other value (``"xxhash64"``) hashes the group key
+    (dayofmonth, month, state), so every action sees the same ids.
     """
     temp_by_coord = temperature.groupBy(
         F.col("latitude_rounded").alias("lat"),
@@ -175,9 +188,12 @@ def build_state_temperature(
     out = state_temp.groupBy("dayofmonth", "month", "state").agg(
         F.avg("AvgTemp").alias("avg_temp")
     )
-    if key_mode == "monotonic":
-        return out.withColumn("id_temp", F.monotonically_increasing_id())
-    return out.withColumn("id_temp", F.xxhash64("dayofmonth", "month", "state"))
+    return add_surrogate_key(
+        out,
+        "id_temp",
+        mode="monotonic" if key_mode == "monotonic" else "hash",
+        natural_key=["dayofmonth", "month", "state"],
+    )
 
 
 def build_star_schema(

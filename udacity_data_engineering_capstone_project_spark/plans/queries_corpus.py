@@ -419,8 +419,8 @@ def contamination_embedding_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replayed as a window-count filter). The family is pinned at 8x8 "
     "so the plane literals baked into the SQL stay valid — the r12 "
     "threshold-aware default (num_planes=None) would pick 5x38 at "
-    "this 0.3 band; `tools/scale_probe_contamination.py --family` "
-    "measures that path against the exact flags instead. Promoted to "
+    "this 0.3 band; BASELINE.md r12 measures that path against the "
+    "exact flags instead. Promoted to "
     "a driver slot in round 11, the round it landed." 
     "Ceded its driver slot in round 13 after holding a fresh green row; "
     "hash-pinned in the unregistered parity gate.",

@@ -204,11 +204,9 @@ DECAY_ORACLE = f"""
     DECAY_ORACLE,
     "Per-user exponential time-decay activity score "
     "(operators/stateful.py:decay_score). The recurrence telescopes, "
-    "so the default path is the pure-codegen closed form "
-    "sum(v*exp(-lam*(t_max-t))) (0.14s vs 3.8s for the per-key "
-    "applyInPandas scan at sf0.1 — the scan stays as method='scan', "
-    "the general path for recurrences with no closed form, and is "
-    "agreement-pinned in pytest). The DuckDB oracle evaluates the "
+    "so it runs as the pure-codegen closed form "
+    "sum(v*exp(-lam*(t_max-t))) (0.14s vs 3.8s for a per-key "
+    "applyInPandas scan at sf0.1). The DuckDB oracle evaluates the "
     "same closed form — graded at 3 decimals so float-order and libm "
     "jitter (~1e-12) cannot reach a rounding boundary.",
     # r6: no_oracle -> hash-checked via the closed form; closed form

@@ -6,7 +6,6 @@ from udacity_data_engineering_capstone_project_spark.sources.readers import (
     read_table,
 )
 from udacity_data_engineering_capstone_project_spark.sources.sinks import (
-    write_csv,
     write_parquet,
 )
 from udacity_data_engineering_capstone_project_spark.sources.warc import (
@@ -35,7 +34,6 @@ __all__ = [
     "read_warc_stream",
     "warc_documents",
     "warc_http_documents",
-    "write_csv",
     "write_parquet",
     "write_warc",
 ]

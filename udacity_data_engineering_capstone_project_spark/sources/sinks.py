@@ -28,16 +28,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    header: bool = True,
-) -> None:
-    writer = df.write.mode(mode).option("header", "true" if header else "false")
-    writer.csv(path)
-
-
 def write_jsonl(
     df: DataFrame,
     path: str,
