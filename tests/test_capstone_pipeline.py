@@ -253,3 +253,134 @@ def test_analyst_query(spark, staging):
     assert out, "analyst query returned no rows"
     top = out[0]
     assert top["tourist_num"] >= 1 and top["month"] == 5
+
+
+def test_clean_steps_keep_their_schemas(spark, staging):
+    """Each clean step is one projection; the column names, order and
+    types are the reference shapes the star build and the writes rely
+    on."""
+    from udacity_data_engineering_capstone_project_spark.functions.dates import (
+        with_date_parts,
+    )
+
+    imm, temp, air = staging
+
+    def fields(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert fields(capstone.clean_immigration(imm)) == [
+        ("i94port", "string"), ("biryear", "double"), ("gender", "string"),
+        ("airline", "string"), ("i94visa", "double"), ("arrdate_dt", "date"),
+        ("depdate_dt", "date"), ("arrdate_dayofmonth", "int"),
+        ("arrdate_month", "int"), ("arrdate_year", "int"), ("state", "string"),
+        ("id_imm", "bigint"),
+    ]
+    assert fields(capstone.clean_temperature(temp)) == [
+        ("dt", "date"), ("AverageTemperature", "string"), ("City", "string"),
+        ("Country", "string"), ("Latitude", "string"), ("Longitude", "string"),
+        ("dayofmonth", "int"), ("month", "int"), ("year", "int"),
+        ("latitude_rounded", "string"), ("longitude_rounded", "string"),
+    ]
+    assert fields(capstone.clean_airport_codes(air)) == [
+        ("ident", "string"), ("iso_country", "string"), ("iso_region", "string"),
+        ("coordinates", "string"), ("latitude", "string"), ("longitude", "string"),
+        ("state", "string"),
+    ]
+    parts = with_date_parts(
+        spark.sql("SELECT DATE'2016-05-09' AS d, 1 AS x"), "d", prefix="p_"
+    )
+    assert fields(parts) == [
+        ("d", "date"), ("x", "int"), ("p_dayofmonth", "int"),
+        ("p_month", "int"), ("p_year", "int"),
+    ]
+    assert parts.collect()[0][2:] == (9, 5, 2016)
+
+
+def _star(staging, persist_dims=True):
+    imm, temp, air = staging
+    final = capstone.clean_immigration(imm)
+    st = capstone.build_state_temperature(
+        capstone.clean_temperature(temp), capstone.clean_airport_codes(air)
+    )
+    return final, st, capstone.build_star_schema(final, st, persist_dims=persist_dims)
+
+
+def _uncache(*dfs):
+    for df in dfs:
+        df.unpersist()
+
+
+def test_build_star_schema_caches_shared_lineages(spark, staging):
+    """The cleaned input and state_temp (= fact_temp) are computed once:
+    build_star_schema persists them with the dims; fact_imm stays
+    uncached. persist_dims=False caches nothing."""
+    final, st, tables = _star(staging)
+    try:
+        assert final.storageLevel.useMemory
+        assert tables["fact_temp"].storageLevel.useMemory
+        assert tables["dim_state"].storageLevel.useMemory
+        assert not tables["fact_imm"].storageLevel.useMemory
+    finally:
+        _uncache(final, st, *tables.values())
+
+    # a plan no other test caches (the cache manager matches plans, not
+    # frame objects)
+    imm, temp, air = staging
+    staging_ = (imm.filter(F.col("cicid") < 100), temp, air)
+    final, st, tables = _star(staging_, persist_dims=False)
+    assert not final.storageLevel.useMemory
+    assert not st.storageLevel.useMemory
+    assert not any(t.storageLevel.useMemory for t in tables.values())
+
+
+def _write_star(tables, out):
+    from udacity_data_engineering_capstone_project_spark.sources.sinks import write_parquet
+
+    for name, df in tables.items():
+        write_parquet(df, f"{out}/{name}",
+                      partition_by=["month"] if name == "fact_temp" else None)
+
+
+def _true_counts(final, tables):
+    n = final.count()
+    return {
+        "fact_imm": n, "dim_person": n, "dim_state": 3,
+        "dim_time": final.select("arrdate_dt").distinct().count(),
+        "dim_ports": 4, "dim_airlines": 4,
+        "fact_temp": tables["fact_temp"].count(),
+    }
+
+
+def test_gate_catches_a_short_write(spark, staging, tmp_path):
+    """The gate checks what was written: a fact_imm write that lost a
+    row fails the row-count check against the true count."""
+    final, st, tables = _star(staging)
+    try:
+        counts = _true_counts(final, tables)
+        dropped = tables["fact_imm"].select("id_imm").first()["id_imm"]
+        tables["fact_imm"] = tables["fact_imm"].filter(F.col("id_imm") != dropped)
+        _write_star(tables, tmp_path)
+        assert tables["fact_imm"]._sg_written["rows"] == counts["fact_imm"] - 1
+        with pytest.raises(QualityError, match="fact_imm"):
+            capstone.run_quality_checks(tables, counts, expected_distinct_states=3)
+    finally:
+        _uncache(final, st, *tables.values())
+
+
+def test_gate_after_writes_runs_at_most_one_job(spark, staging, tmp_path):
+    """After the 7 writes the row counts come from the writes' own
+    metrics: the whole gate runs at most one Spark job (the
+    distinct-state check on the cached dim_state)."""
+    from udacity_data_engineering_capstone_project_spark.session import job_group
+
+    final, st, tables = _star(staging)
+    try:
+        counts = _true_counts(final, tables)
+        _write_star(tables, tmp_path)
+        group = f"gate-{tmp_path.name}"
+        with job_group(spark, group):
+            capstone.run_quality_checks(tables, counts, expected_distinct_states=3)
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) <= 1
+    finally:
+        _uncache(final, st, *tables.values())

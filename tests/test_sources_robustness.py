@@ -3,6 +3,8 @@ joins."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
@@ -886,6 +888,73 @@ def test_configure_s3_sets_hadoop_conf(spark):
             conf.unset(k)
         if before_ak is not None:
             conf.set("fs.s3a.access.key", before_ak)
+
+
+def test_local_defaults_follow_the_host(monkeypatch):
+    """Without the env pins a local session takes the CPUs this process
+    may use and ~60 % of MemTotal (at least 1g); the pins win when set.
+    No session is started."""
+    from udacity_data_engineering_capstone_project_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    cpus, mem = session.local_defaults()
+    assert cpus == len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    assert mem == f"{max(1024, total_kb * 6 // 10 // 1024)}m"
+
+    monkeypatch.setattr(session, "_mem_total_kb", lambda: 512 * 1024)
+    assert session.local_defaults()[1] == "1024m"
+    monkeypatch.setattr(session, "_mem_total_kb", lambda: None)
+    assert session.local_defaults()[1] == "1024m"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
+    assert session.local_defaults() == (3, "5g")
+
+
+def _part_files(path) -> int:
+    return sum(
+        1 for _, _, files in os.walk(path) for f in files
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+
+
+def test_write_parquet_reports_committed_rows_and_files(spark, tmp_path):
+    """write_parquet returns (and records as df._sg_written) the write's
+    own row and file counts from the SQL status store; they match the
+    committed parquet."""
+    from udacity_data_engineering_capstone_project_spark.sources.sinks import write_parquet
+
+    df = spark.range(0, 1000, numPartitions=3).withColumn("p", F.col("id") % 4)
+
+    flat = str(tmp_path / "flat")
+    got = write_parquet(df, flat)
+    assert got == {"rows": 1000, "files": _part_files(flat)}
+    assert got["rows"] == spark.read.parquet(flat).count() and got["files"] == 3
+    assert df._sg_written == got
+
+    parted = str(tmp_path / "parted")
+    got = write_parquet(df, parted, partition_by=["p"])
+    assert got == {"rows": spark.read.parquet(parted).count(), "files": _part_files(parted)}
+    assert got["files"] > 3  # one file per (task, partition value)
+
+    # append: only this write's rows, although the table now holds both
+    more = spark.range(0, 250, numPartitions=1).withColumn("p", F.col("id") % 4)
+    got = write_parquet(more, flat, mode="append")
+    assert got == {"rows": 250, "files": 1}
+    assert spark.read.parquet(flat).count() == 1250
+    assert _part_files(flat) == 4
+
+    # back-to-back writes to different paths each get their own figures
+    a, b = str(tmp_path / "a"), str(tmp_path / "a2")
+    small = spark.range(0, 7, numPartitions=1)
+    got_a = write_parquet(small, a)
+    got_b = write_parquet(df, b)
+    assert got_a == {"rows": 7, "files": 1}
+    assert got_b == {"rows": 1000, "files": 3}
+    assert small._sg_written == got_a and df._sg_written == got_b
 
 
 def test_job_group_scopes_spark_jobs(spark):

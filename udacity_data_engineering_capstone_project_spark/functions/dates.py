@@ -34,8 +34,8 @@ def with_date_parts(
     """Add day-of-month / month / year columns (reference `etl.py:105-107,
     132-134`). Prefix matches the reference's `arrdate_*` naming."""
     c = F.col(date_col)
-    return (
-        df.withColumn(f"{prefix}dayofmonth", F.dayofmonth(c))
-        .withColumn(f"{prefix}month", F.month(c))
-        .withColumn(f"{prefix}year", F.year(c))
-    )
+    return df.withColumns({
+        f"{prefix}dayofmonth": F.dayofmonth(c),
+        f"{prefix}month": F.month(c),
+        f"{prefix}year": F.year(c),
+    })

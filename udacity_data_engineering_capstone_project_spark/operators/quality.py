@@ -20,7 +20,13 @@ class QualityError(ValueError):
 
 
 def expect_row_count(df: DataFrame, expected: int, name: str = "dataframe") -> int:
-    actual = df.count()
+    """Assert the frame's row count. A frame written by
+    `sources.sinks.write_parquet` carries that write's committed row
+    count (``df._sg_written["rows"]``, from the write's own SQL metrics);
+    the check compares against it, so it gates on what was written and
+    runs no job. Any other frame is counted (``df.count()``)."""
+    written = getattr(df, "_sg_written", None)
+    actual = written["rows"] if written else df.count()
     if actual != expected:
         raise QualityError(
             f"{name}: expected {expected} rows, found {actual}"

@@ -106,11 +106,13 @@ def clean_temperature(raw: DataFrame) -> DataFrame:
             F.to_date(F.col("dt"), "yyyy-MM-dd").alias("dt"),
             "AverageTemperature", "City", "Country", "Latitude", "Longitude",
         )
-        .withColumn("dayofmonth", F.dayofmonth(F.col("dt")))
-        .withColumn("month", F.month(F.col("dt")))
-        .withColumn("year", F.year(F.col("dt")))
-        .withColumn("latitude_rounded", printf_round0(extract_decimal("Latitude")))
-        .withColumn("longitude_rounded", printf_round0(extract_decimal("Longitude")))
+        .withColumns({
+            "dayofmonth": F.dayofmonth(F.col("dt")),
+            "month": F.month(F.col("dt")),
+            "year": F.year(F.col("dt")),
+            "latitude_rounded": printf_round0(extract_decimal("Latitude")),
+            "longitude_rounded": printf_round0(extract_decimal("Longitude")),
+        })
         .dropna()
     )
 
@@ -122,15 +124,15 @@ def clean_airport_codes(raw: DataFrame) -> DataFrame:
     region split, state normalization."""
     return (
         raw.filter(F.col("iso_country") == "US")
-        .withColumn(
-            "latitude",
-            printf_round0(F.abs(split_item("coordinates", ",", 1).cast("double"))),
-        )
-        .withColumn(
-            "longitude",
-            printf_round0(F.abs(split_item("coordinates", ",", 0).cast("double"))),
-        )
-        .withColumn("state", split_item("iso_region", "-", 1))
+        .withColumns({
+            "latitude": printf_round0(
+                F.abs(split_item("coordinates", ",", 1).cast("double"))
+            ),
+            "longitude": printf_round0(
+                F.abs(split_item("coordinates", ",", 0).cast("double"))
+            ),
+            "state": split_item("iso_region", "-", 1),
+        })
         .transform(lambda df: normalize_domain(df, "state", VALID_US_STATES))
     )
 
@@ -206,10 +208,25 @@ def build_star_schema(
     `etl.py:221-293`). Returns the 7 star-schema tables; dims default to
     deterministic keys so outputs are hash-checkable.
 
-    ``persist_dims`` caches each dimension (reference C1,
-    `etl.py:311-319`): every dim is consumed at least twice (its own
-    write + the fact join), and without caching each action recomputes
-    the full upstream lineage."""
+    ``persist_dims`` caches each shared lineage once, so no action
+    recomputes it (reference C1, `etl.py:311-319`, persists only the
+    dims; SURVEY.md §3):
+
+    - each dimension: consumed at least twice (its own write + the
+      fact join);
+    - the cleaned ``immigration`` input (the caller's frame): it feeds
+      4 dims, ``dim_person`` and ``fact_imm``, and without the cache
+      every one of them re-scans the raw input and redoes the cleaning
+      and its ``dropDuplicates`` shuffle;
+    - ``state_temp`` (returned as ``fact_temp``): written, joined into
+      ``fact_imm`` and read again by `analyst_query`.
+
+    ``fact_imm`` is not cached: it is the fact-scale side of the star,
+    and each consumer (its write, the analyst query) reads it once.
+    ``persist_dims=False`` caches nothing."""
+    if persist_dims:
+        immigration.persist()
+        state_temp.persist()
     dim_state = build_dimension(immigration, ["state"], "id_state", key_mode=key_mode)
     dim_time = build_dimension(
         immigration,

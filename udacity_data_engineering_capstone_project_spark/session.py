@@ -14,6 +14,39 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _mem_total_kb() -> int | None:
+    """``MemTotal`` from /proc/meminfo, in KiB; None where there is none."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
+def local_defaults() -> tuple[int, str]:
+    """(cores, JVM heap) for a local session.
+
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` when set; otherwise
+    the CPUs this process may run on (its affinity mask, not the host's
+    core count) and about 60 % of the host's memory, at least ``1g``:
+    in local mode one JVM runs every task, and a heap larger than
+    physical memory gets the process killed instead of spilling."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if not cpus:
+        try:
+            cpus = len(os.sched_getaffinity(0))
+        except AttributeError:  # no affinity API (macOS)
+            cpus = os.cpu_count() or 1
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        total_kb = _mem_total_kb() or 0
+        mem = f"{max(1024, total_kb * 6 // 10 // 1024)}m"
+    return int(cpus), mem
+
+
 def get_spark(
     app_name: str = "udacity-capstone-spark-engine",
     master: str | None = None,
@@ -22,14 +55,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
+    ``master`` defaults to ``local[<cores>]`` locally; on a real
     cluster callers pass ``master=None`` and set it via spark-submit.
+    Cores and heap size come from `local_defaults`.
     """
+    cpus, heap = local_defaults()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(master)
@@ -63,7 +97,7 @@ def get_spark(
         # In local mode driver == executor: size the single JVM for the
         # host (default 1g OOMs immediately at any real scale). On a
         # cluster these are overridden by spark-submit.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
     )

@@ -14,18 +14,75 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 
+#: Plan-graph node of a file-source write; its description starts with
+#: the qualified output path.
+_INSERT_NODE = "Execute InsertIntoHadoopFsRelationCommand"
+#: How many of the newest SQL executions to search for the write.
+_RECENT_EXECUTIONS = 32
+
+
 def write_parquet(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
     partition_by: Sequence[str] | None = None,
     compression: str = "snappy",
-) -> None:
-    """Write parquet with optional hive-style partitioning."""
+) -> dict[str, int] | None:
+    """Write parquet with optional hive-style partitioning.
+
+    Returns the write's own committed figures, ``{"rows": n, "files":
+    n}``, and records the same dict on the frame as ``df._sg_written``
+    (so `expect_row_count` can gate on what was written without
+    recomputing the lineage). With ``mode="append"`` they cover this
+    write only. ``None`` (recorded too, so no stale figures survive)
+    when the write's SQL execution cannot be found; see
+    `_written_metrics`."""
     writer = df.write.mode(mode).option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    df._sg_written = _written_metrics(df.sparkSession, path)
+    return df._sg_written
+
+
+def _written_metrics(spark, path: str) -> dict[str, int] | None:
+    """``{"rows", "files"}`` of the newest file write to ``path``, read
+    from the SQL status store (the metrics the SQL tab shows; available
+    with ``spark.ui.enabled=false``) — no data is scanned.
+
+    The write is found by its plan node's output path among the newest
+    executions, not by list position: another thread's queries or the
+    store's retention limit can shift the list. Values arrive formatted
+    (``"1,000"``); ``written output`` is rounded (``"9.7 KiB"``), so
+    bytes are left out. ``None`` when no matching execution is found."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    qualified = hpath.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(hpath)
+    prefix = f"{_INSERT_NODE} {qualified.toString()},"
+    # the write's commit-time metric updates reach the store through the
+    # listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - _RECENT_EXECUTIONS), _RECENT_EXECUTIONS)
+    ids = sorted((recent.apply(i).executionId() for i in range(recent.size())), reverse=True)
+    for eid in ids:
+        nodes = store.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if node.name() != _INSERT_NODE or not node.desc().startswith(prefix):
+                continue
+            values = store.executionMetrics(eid)
+            metrics = node.metrics()
+            acc = {metrics.apply(j).name(): metrics.apply(j).accumulatorId()
+                   for j in range(metrics.size())}
+            rows = values.get(acc["number of output rows"])
+            files = values.get(acc["number of written files"])
+            if not (rows.isDefined() and files.isDefined()):
+                return None
+            return {"rows": int(rows.get().replace(",", "")),
+                    "files": int(files.get().replace(",", ""))}
+    return None
 
 
 def write_jsonl(
