@@ -95,12 +95,11 @@ def test_clean_airport_codes(spark, staging):
     assert rows["BAD"]["state"] == "other"  # malformed region normalized
 
 
-@pytest.mark.parametrize("use_window", [True, False])
-def test_state_temperature_argmax(spark, staging, use_window):
+def test_state_temperature_argmax(spark, staging):
     _, temp, air = staging
     t = capstone.clean_temperature(temp)
     a = capstone.clean_airport_codes(air)
-    st = capstone.build_state_temperature(t, a, use_window_argmax=use_window)
+    st = capstone.build_state_temperature(t, a)
     rows = {(r["dayofmonth"], r["month"], r["state"]): r for r in st.collect()}
     # NY wins the (41,74) coordinate argmax (2 NY airports vs 1 NJ)
     assert (9, 5, "NY") in rows
@@ -218,7 +217,7 @@ def test_hash_id_imm_keys_raw_record_id(spark, staging):
         for c in (10.0, 11.0)
     ]
     raw = spark.createDataFrame(twin, schema=imm.schema)
-    rows = capstone.clean_immigration(raw, key_mode="xxhash64").collect()
+    rows = capstone.clean_immigration(raw).collect()
     cleaned = [{k: v for k, v in r.asDict().items() if k != "id_imm"} for r in rows]
     assert len(cleaned) == 2 and cleaned[0] == cleaned[1]
     ids = {r["id_imm"] for r in rows}
@@ -234,12 +233,17 @@ def test_hash_id_temp_is_the_group_key_hash(spark, staging):
     st = capstone.build_state_temperature(
         capstone.clean_temperature(temp),
         capstone.clean_airport_codes(air),
-        key_mode="xxhash64",
     )
     rows = st.withColumn(
         "expect", F.xxhash64("dayofmonth", "month", "state")
     ).collect()
     assert rows and all(r["id_temp"] == r["expect"] for r in rows)
+    with pytest.raises(ValueError):
+        capstone.build_state_temperature(
+            capstone.clean_temperature(temp),
+            capstone.clean_airport_codes(air),
+            key_mode="monotonic",
+        )
 
 
 def test_analyst_query(spark, staging):

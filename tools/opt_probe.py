@@ -1,14 +1,15 @@
-"""Round-13 optimization probe: per-query explain capture + isolated
-noop-sink timing (guide §1.1/§1.4).
+"""Optimization probe: per-query explain capture + isolated noop-sink
+timing.
 
 Usage::
 
-    python tools/opt_probe.py explain name1,name2 [--out plans/r13] [--suffix before]
+    python tools/opt_probe.py explain name1,name2 [--out plans/_probe] [--suffix before]
     python tools/opt_probe.py time name1,name2 [--sink noop|count] [--reps 3]
 
-``explain`` writes ``plans/r13/<name>_<suffix>.txt`` with the
-``.explain("formatted")`` output plus a one-line summary (Exchange
-count, join strategies, Python-eval nodes) so plan diffs are grep-able.
+``explain`` writes ``plans/_probe/<name>_<suffix>.txt`` (git-ignored)
+with the ``.explain("formatted")`` output plus a one-line summary
+(Exchange count, join strategies, Python-eval nodes) so plan diffs are
+grep-able.
 
 ``time`` measures each query with the same steady-state discipline as
 bench.py (warm until two consecutive runs within 1.3x, best-of-N) but
@@ -53,7 +54,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("mode", choices=["explain", "time"])
     ap.add_argument("names", help="comma-separated query names")
-    ap.add_argument("--out", default=os.path.join(_REPO_ROOT, "plans", "r13"))
+    ap.add_argument("--out", default=os.path.join(_REPO_ROOT, "plans", "_probe"))
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--sink", choices=["noop", "count"], default="noop")
     ap.add_argument("--reps", type=int, default=3)

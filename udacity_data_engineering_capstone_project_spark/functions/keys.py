@@ -2,16 +2,16 @@
 
 The reference uses `monotonically_increasing_id` everywhere
 (`etl.py:114,217,230,240,249,259,269`) — partition-encoded,
-non-contiguous, and **non-deterministic across runs/partitionings**,
-which makes results impossible to hash-check. We support three modes:
+non-contiguous, and **non-deterministic across runs/partitionings**:
+every action that recomputes the lineage may number the rows
+differently, so two tables written from it need not join. Every key
+here is a pure function of the data instead:
 
-- ``monotonic``: reference parity; zero-shuffle, ids encode partition.
-- ``row_number``: contiguous deterministic ids over an explicit order.
-  NOTE: a global row_number over one window is a single-partition sort
-  — fine for dimension tables (small), wrong for 100 TB facts. For a
-  fact-scale deterministic id prefer ``hash``.
-- ``hash``: xxhash64 of the natural key — deterministic, shuffle-free,
-  scales to any size; collisions ~ birthday bound on 64 bits.
+- ``row_number``: contiguous ids over an explicit order. A global
+  row_number over one window is a single-partition sort — fine for
+  dimension tables (small), wrong for fact-scale tables.
+- ``hash``: xxhash64 of the natural key — shuffle-free, scales to any
+  size; collisions ~ birthday bound on 64 bits. The fact-scale key.
 """
 
 from __future__ import annotations
@@ -29,8 +29,6 @@ def add_surrogate_key(
     order_by: Sequence[str] | None = None,
     natural_key: Sequence[str] | None = None,
 ) -> DataFrame:
-    if mode == "monotonic":
-        return df.withColumn(key_name, F.monotonically_increasing_id())
     if mode == "row_number":
         cols = list(order_by or df.columns)
         w = Window.orderBy(*[F.col(c) for c in cols])

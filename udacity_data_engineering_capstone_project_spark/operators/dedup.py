@@ -35,17 +35,9 @@ from udacity_data_engineering_capstone_project_spark.functions.text import (
     tokens,
 )
 from udacity_data_engineering_capstone_project_spark.operators.similarity import cosine
-
-
-def _ensure_parallelism(df: DataFrame, key: str) -> DataFrame:
-    """Spread a narrow input across the cluster before a CPU-heavy
-    explode/aggregate stage. Small single-split files (a 5 MB parquet)
-    otherwise pin the whole stage to one task; at real scale inputs
-    arrive already split and this is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, F.col(key))
-    return df
+from udacity_data_engineering_capstone_project_spark.operators.textstats import (
+    _ensure_parallelism,
+)
 
 
 def exact_text_dedup(

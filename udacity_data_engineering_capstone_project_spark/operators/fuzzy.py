@@ -34,12 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from udacity_data_engineering_capstone_project_spark.operators.dedup import (
-    _ensure_parallelism,
-)
 from udacity_data_engineering_capstone_project_spark.operators.relational import (
     DEFAULT_BROADCAST_MAX_BYTES,
     maybe_broadcast,
+)
+from udacity_data_engineering_capstone_project_spark.operators.textstats import (
+    _ensure_parallelism,
 )
 
 

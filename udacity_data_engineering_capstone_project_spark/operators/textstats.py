@@ -248,9 +248,10 @@ def bm25_scores(
 
 def _ensure_parallelism(df: DataFrame, key: str) -> DataFrame:
     """Spread a narrow input across the cluster before a CPU-heavy
-    per-document stage (n-gram construction is CPU-bound per byte, so
-    byte-sized input splits under-parallelize it; at real scale inputs
-    arrive already split and this is a no-op)."""
+    per-document stage (n-gram construction, shingling, explode +
+    aggregate are CPU-bound per byte, so small single-split files pin
+    the whole stage to one task; at real scale inputs arrive already
+    split and this is a no-op)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, F.col(key))

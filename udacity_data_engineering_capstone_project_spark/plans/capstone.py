@@ -6,10 +6,13 @@ functions over DataFrames, with the reference's Catalyst blockers
 removed (SURVEY.md §4):
 
 - SAS-date Python UDF (`etl.py:41-47`) -> native `date_add` expression.
-- argmax via count->max->self-join (`etl.py:181-204`) -> optional
-  single-window formulation (`use_window_argmax=True`); the join
-  formulation is retained (tie-preserving reference semantics).
-- `monotonically_increasing_id` surrogate keys -> deterministic modes.
+- argmax via count->max->self-join (`etl.py:181-204`) -> one window
+  pass (`top_per_group`; count ties break on state asc).
+- `monotonically_increasing_id` surrogate keys -> deterministic keys,
+  the same on every action and every run: the facts hash their natural
+  keys (`id_imm` = xxhash64(cicid), `id_temp` = xxhash64(dayofmonth,
+  month, state)), the dims number their distinct values with a
+  `row_number` over the natural key.
 - cosmetic ORDER BYs inside subqueries dropped (they forced pointless
   range exchanges, `etl.py:176,185,195,198,214`).
 
@@ -40,7 +43,6 @@ from udacity_data_engineering_capstone_project_spark.operators.quality import (
     expect_row_count,
 )
 from udacity_data_engineering_capstone_project_spark.operators.relational import (
-    argmax_join,
     maybe_broadcast,
     top_per_group,
 )
@@ -56,16 +58,15 @@ VALID_US_STATES = [
 ]
 
 
-def clean_immigration(raw: DataFrame, key_mode: str = "monotonic") -> DataFrame:
+def clean_immigration(raw: DataFrame) -> DataFrame:
     """Immigration staging -> cleaned/conformed (reference
     `read_immigration_staging`, `etl.py:89-118`): SAS-date decode,
     date parts, state normalization, null fills, full-row dedup,
     projection, tourism filter (i94visa == 2), surrogate id.
 
-    ``key_mode="monotonic"`` (reference parity) numbers the cleaned
-    rows; any other value (``"xxhash64"``) hashes the raw record id
-    ``cicid`` BEFORE the projection, so rows that differ only in
-    dropped columns keep distinct ids."""
+    ``id_imm`` hashes the raw record id ``cicid`` BEFORE the
+    projection, so rows that differ only in dropped columns keep
+    distinct ids."""
     cleaned = (
         raw.withColumn("arrdate_dt", sas_date_to_date("arrdate"))
         .withColumn("depdate_dt", sas_date_to_date("depdate"))
@@ -74,25 +75,17 @@ def clean_immigration(raw: DataFrame, key_mode: str = "monotonic") -> DataFrame:
     cleaned = normalize_domain(
         cleaned.withColumn("state", F.col("i94addr")), "state", VALID_US_STATES
     )
-    keep = [
-        "i94port", "biryear", "gender", "airline", "i94visa",
-        "arrdate_dt", "depdate_dt", "arrdate_dayofmonth",
-        "arrdate_month", "arrdate_year", "state",
-    ]
-    if key_mode != "monotonic":
-        cleaned = add_surrogate_key(
-            cleaned, "id_imm", mode="hash", natural_key=["cicid"]
-        )
-        keep.append("id_imm")
-    cleaned = (
-        cleaned.fillna("unknown", subset=["gender"])
+    return (
+        add_surrogate_key(cleaned, "id_imm", natural_key=["cicid"])
+        .fillna("unknown", subset=["gender"])
         .dropDuplicates()
-        .select(*keep)
+        .select(
+            "i94port", "biryear", "gender", "airline", "i94visa",
+            "arrdate_dt", "depdate_dt", "arrdate_dayofmonth",
+            "arrdate_month", "arrdate_year", "state", "id_imm",
+        )
         .filter(F.col("i94visa") == 2)
     )
-    if key_mode == "monotonic":
-        return add_surrogate_key(cleaned, "id_imm", mode="monotonic")
-    return cleaned
 
 
 def clean_temperature(raw: DataFrame) -> DataFrame:
@@ -140,24 +133,25 @@ def clean_airport_codes(raw: DataFrame) -> DataFrame:
 def build_state_temperature(
     temperature: DataFrame,
     airport_codes: DataFrame,
-    use_window_argmax: bool = True,
-    key_mode: str = "monotonic",
+    key_mode: str = "xxhash64",
 ) -> DataFrame:
     """fact_temp / state_temp (reference `create_temperature_table`,
     `etl.py:164-219`): average temperature per coarsened coordinate,
     dominant state per coordinate (argmax), coordinate join, then
     avg-of-avgs per (dayofmonth, month, state).
 
-    ``use_window_argmax=True`` replaces the reference's two-agg +
-    self-join with one window pass (half the shuffles); note the window
-    breaks count ties deterministically (state asc) while the reference
-    join KEEPS ties — at tie sites the two formulations differ, matching
-    SURVEY.md §4's documented divergence.
+    One window pass replaces the reference's two-agg + self-join (half
+    the shuffles); note the window breaks count ties deterministically
+    (state asc) while the reference join KEEPS ties — at tie sites the
+    two formulations differ, matching SURVEY.md §4's documented
+    divergence (`argmax_join` keeps the tie-preserving form).
 
-    ``key_mode="monotonic"`` (reference parity) numbers the output
-    rows; any other value (``"xxhash64"``) hashes the group key
-    (dayofmonth, month, state), so every action sees the same ids.
+    ``id_temp`` hashes the group key (dayofmonth, month, state), so
+    every action sees the same ids. ``key_mode`` accepts only
+    ``"xxhash64"``; it remains for callers that still pass it.
     """
+    if key_mode != "xxhash64":
+        raise ValueError(f"unknown key_mode: {key_mode!r}")
     temp_by_coord = temperature.groupBy(
         F.col("latitude_rounded").alias("lat"),
         F.col("longitude_rounded").alias("long"),
@@ -165,19 +159,14 @@ def build_state_temperature(
         "dayofmonth",
     ).agg(F.avg("AverageTemperature").alias("AvgTemp"))
 
-    if use_window_argmax:
-        counted = airport_codes.groupBy("latitude", "longitude", "state").agg(
-            F.count("state").alias("num")
-        )
-        dominant = top_per_group(
-            counted,
-            partition_by=["latitude", "longitude"],
-            order_by=[F.col("num").desc(), F.col("state").asc()],
-        )
-    else:
-        dominant = argmax_join(
-            airport_codes, group_by=["latitude", "longitude"], count_col="state"
-        )
+    counted = airport_codes.groupBy("latitude", "longitude", "state").agg(
+        F.count("state").alias("num")
+    )
+    dominant = top_per_group(
+        counted,
+        partition_by=["latitude", "longitude"],
+        order_by=[F.col("num").desc(), F.col("state").asc()],
+    )
 
     state_temp = temp_by_coord.join(
         maybe_broadcast(dominant),
@@ -191,22 +180,19 @@ def build_state_temperature(
         F.avg("AvgTemp").alias("avg_temp")
     )
     return add_surrogate_key(
-        out,
-        "id_temp",
-        mode="monotonic" if key_mode == "monotonic" else "hash",
-        natural_key=["dayofmonth", "month", "state"],
+        out, "id_temp", natural_key=["dayofmonth", "month", "state"]
     )
 
 
 def build_star_schema(
     immigration: DataFrame,
     state_temp: DataFrame,
-    key_mode: str = "row_number",
     persist_dims: bool = True,
 ) -> dict[str, DataFrame]:
     """Dims + facts (reference `create_dim_*`/`create_fact_*`,
-    `etl.py:221-293`). Returns the 7 star-schema tables; dims default to
-    deterministic keys so outputs are hash-checkable.
+    `etl.py:221-293`). Returns the 7 star-schema tables; the dims number
+    their values with a `row_number` over the natural key, so outputs
+    are hash-checkable.
 
     ``persist_dims`` caches each shared lineage once, so no action
     recomputes it (reference C1, `etl.py:311-319`, persists only the
@@ -227,14 +213,13 @@ def build_star_schema(
     if persist_dims:
         immigration.persist()
         state_temp.persist()
-    dim_state = build_dimension(immigration, ["state"], "id_state", key_mode=key_mode)
+    dim_state = build_dimension(immigration, ["state"], "id_state")
     dim_time = build_dimension(
         immigration,
         [("arrdate_dt", "date"), ("arrdate_dayofmonth", "day_of_month"),
          ("arrdate_month", "month"), ("arrdate_year", "year")],
         "id_time",
         key_order=["date"],
-        key_mode=key_mode,
     )
     # dim_person is deliberately NOT deduplicated — 1:1 with fact rows
     # (reference `etl.py:242-249`); its key rides the immigration id so
@@ -242,8 +227,8 @@ def build_star_schema(
     dim_person = immigration.select("gender", "biryear", "id_imm").withColumn(
         "id_person", F.col("id_imm")
     )
-    dim_ports = build_dimension(immigration, ["i94port"], "id_port", key_mode=key_mode)
-    dim_airlines = build_dimension(immigration, ["airline"], "id_airline", key_mode=key_mode)
+    dim_ports = build_dimension(immigration, ["i94port"], "id_port")
+    dim_airlines = build_dimension(immigration, ["airline"], "id_airline")
 
     if persist_dims:
         for d in (dim_state, dim_time, dim_ports, dim_airlines):
@@ -318,7 +303,6 @@ def incremental_capstone_update(
     checkpoint_dir: str,
     staging_dir: str,
     state_temp: DataFrame,
-    key_mode: str = "row_number",
 ) -> tuple[int, dict[str, DataFrame] | None]:
     """Daily incremental processing — the reference write-up's explicit
     wish (Capstone_Project.ipynb cell 44: "the data should be updated
@@ -355,8 +339,7 @@ def incremental_capstone_update(
     # caches + file listings derived from the path.
     spark.catalog.refreshByPath(staging_dir)
     raw = spark.read.parquet(staging_dir).drop("batch_id")
-    cleaned = clean_immigration(raw, key_mode="xxhash64")
-    tables = build_star_schema(cleaned, state_temp, key_mode=key_mode)
+    tables = build_star_schema(clean_immigration(raw), state_temp)
     return n_new, tables
 
 

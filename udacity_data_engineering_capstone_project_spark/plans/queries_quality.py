@@ -351,32 +351,16 @@ def capstone_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                  (s * 3 % 5).cast("string")).alias("coordinates"),
     )
 
-    imm = cap.clean_immigration(imm_stage, key_mode="monotonic")
+    imm = cap.clean_immigration(imm_stage)
     temp = cap.clean_temperature(temp_stage)
     air = cap.clean_airport_codes(air_stage)
-    state_temp = cap.build_state_temperature(
-        temp, air, use_window_argmax=True, key_mode="monotonic"
-    )
-    # ORACLE-PARITY-ONLY key mode (VERDICT r11 #7): key_mode="row_number"
-    # assigns surrogate keys with a GLOBAL row_number() window so the
-    # DuckDB twin can hash-match the exact key values — that is the 8
-    # global-window + 1 global-sort lint warnings PLANS.json records for
-    # this spec, expected here and ONLY here. The scale default is
-    # key_mode="hash" (xxhash64, functions/keys.py): collision-free
-    # surrogate keys with no single-partition sort. Do NOT copy this
-    # twin verbatim for production — on dim_person (1:1 with fact rows)
-    # a global window IS a single-partition sort of the whole fact.
-    tables = cap.build_star_schema(
-        imm, state_temp, key_mode="row_number", persist_dims=False
-    )
-    # make the linter's voice explicit: global-window/global-sort are
-    # the KNOWN, allowed debts of the parity twin; anything else new
-    # in this plan still fails the gate
+    state_temp = cap.build_state_temperature(temp, air)
+    tables = cap.build_star_schema(imm, state_temp, persist_dims=False)
+    # the plan linter gates the fact-scale lineage: dim_person (1:1 with
+    # the fact rows) must lint without an error, with no rule allowed
     from udacity_data_engineering_capstone_project_spark.plans.lint import assert_scalable
 
-    assert_scalable(
-        tables["dim_person"], allow=("global-window", "global-sort")
-    )
+    assert_scalable(tables["dim_person"])
     counts = [
         tables[name].agg(F.count(F.lit(1)).alias("n_rows")).select(
             F.lit(name).alias("table_name"), "n_rows"

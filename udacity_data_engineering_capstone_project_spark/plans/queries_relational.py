@@ -173,9 +173,7 @@ def date_parts_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered=False,  # r10: ceded (rotation, VERDICT r9 #1) to the 15 never-driver-graded promotions; hash-pinned in the unregistered gate
 )
 def dim_with_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return build_dimension(
-        _t(spark, sf_dir, "customer"), ["c_mktsegment"], "id_segment", key_mode="row_number"
-    )
+    return build_dimension(_t(spark, sf_dir, "customer"), ["c_mktsegment"], "id_segment")
 
 
 # Oracle twin for top1_per_group — the query is unregistered (slot

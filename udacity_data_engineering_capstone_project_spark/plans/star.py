@@ -24,43 +24,33 @@ def build_dimension(
     df: DataFrame,
     columns: Sequence[str | tuple[str, str]],
     key_name: str,
-    dedup: bool = True,
-    key_mode: str = "row_number",
     key_order: Sequence[str] | None = None,
 ) -> DataFrame:
     """Extract a dimension: project (+rename), distinct, surrogate key.
 
     Reference pattern `etl.py:221-269` (select -> distinct ->
-    monotonically_increasing_id); default key mode here is deterministic
-    `row_number` so results hash-match across runs (SURVEY.md §4 item 3).
+    monotonically_increasing_id); the key here is a `row_number` over
+    ``key_order`` (default: the dimension's columns), so results
+    hash-match across runs (SURVEY.md §4 item 3).
     ``columns`` entries are names or (source, alias) pairs.
-    ``dedup=False`` reproduces dim_person (1:1 with fact rows,
-    `etl.py:242-249`).
     """
     cols: list[Column] = [
         F.col(c[0]).alias(c[1]) if isinstance(c, tuple) else F.col(c) for c in columns
     ]
-    out = df.select(*cols)
-    if dedup:
-        out = out.distinct()
+    out = df.select(*cols).distinct()
     order = list(key_order) if key_order else [c[1] if isinstance(c, tuple) else c for c in columns]
-    return add_surrogate_key(out, key_name, mode=key_mode, order_by=order, natural_key=order)
+    return add_surrogate_key(out, key_name, mode="row_number", order_by=order)
 
 
 def build_fact(
     base: DataFrame,
     dims: Sequence[tuple[DataFrame, Sequence[Column] | Sequence[str] | Column]],
     keep: Sequence[Column | str],
-    broadcast_max_bytes: int | None = None,
 ) -> DataFrame:
     """Assemble a fact table: left-join every dim (row-preserving,
     reference `etl.py:285-293`), keep the surrogate keys + measures.
 
     Dims are size-gated per dim (`maybe_broadcast`): real dims get the
     broadcast hint, a dim_person-scale dim (1:1 with the fact,
-    `etl.py:242-249`) falls back to shuffle/AQE. ``None`` uses the
-    operator default gate."""
-    kwargs = {} if broadcast_max_bytes is None else {
-        "broadcast_max_bytes": broadcast_max_bytes
-    }
-    return star_left_join(base, dims, select=keep, **kwargs)
+    `etl.py:242-249`) falls back to shuffle/AQE."""
+    return star_left_join(base, dims, select=keep)
