@@ -447,7 +447,7 @@ def test_fuzzy_join_reference_brute_force_and_semantics(spark):
 
 def test_fuzzy_join_reference_plan_is_broadcast_no_cartesian(spark):
     """The candidate join must be a broadcast equi-join on the key
-    hash for a provably-small dim (driver-local -> annotated small):
+    hash for a provably-small dim (checkpointed, block-manager sized):
     no cartesian/BNL, no shuffle of the dirty side before the join."""
     from udacity_data_engineering_capstone_project_spark.operators.fuzzy import (
         fuzzy_join_reference,

@@ -121,7 +121,9 @@ def test_argmax_join_works_without_broadcast(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def _disable_auto_broadcast(spark):
+def _set_broadcast_threshold(spark, value):
+    """Set the planner's and AQE's broadcast thresholds to ``value``;
+    return the previous settings for `_restore_conf`."""
     keys = [
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
@@ -129,8 +131,12 @@ def _disable_auto_broadcast(spark):
     prev = {}
     for k in keys:
         prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, "-1")
+        spark.conf.set(k, str(value))
     return prev
+
+
+def _disable_auto_broadcast(spark):
+    return _set_broadcast_threshold(spark, -1)
 
 
 def _restore_conf(spark, prev):
@@ -186,10 +192,12 @@ def test_no_forced_broadcast_on_linearly_growing_input(
 
 
 def test_star_left_join_gates_hint_per_dim(spark, sf_dir):
-    """star_left_join hints each dim independently: with a gate sized
-    between nation (25 rows) and customer (fact-scale), only nation's
-    join is broadcast — a dim_person-scale dim goes through the
-    shuffle path instead of a forced fact-sized broadcast."""
+    """star_left_join broadcasts only the dims under Spark's own
+    threshold (it adds no hint): with the session's broadcast
+    thresholds between the nation (25 rows) and customer (fact-scale)
+    estimates, only nation's join is broadcast — a dim_person-scale
+    dim goes through the shuffle path instead of a fact-sized
+    broadcast."""
     from udacity_data_engineering_capstone_project_spark.operators.relational import (
         star_left_join,
     )
@@ -198,12 +206,16 @@ def test_star_left_join_gates_hint_per_dim(spark, sf_dir):
     o = read_table(spark, sf_dir, "orders")
     c = read_table(spark, sf_dir, "customer")  # oversized "dim"
     n = read_table(spark, sf_dir, "nation")
-    c_est = c._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    n_est = n._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    gate = (int(str(n_est)) + int(str(c_est))) // 2
-    assert int(str(n_est)) <= gate < int(str(c_est))
+    # the estimates the planner sees: each dim pruned to the columns
+    # the join and the select read
+    c_side = c.select("c_custkey", "c_nationkey", "c_name")
+    n_side = n.select("n_nationkey", "n_name")
+    c_est = c_side._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    n_est = n_side._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    threshold = (int(str(n_est)) + int(str(c_est))) // 2
+    assert int(str(n_est)) <= threshold < int(str(c_est))
 
-    prev = _disable_auto_broadcast(spark)
+    prev = _set_broadcast_threshold(spark, threshold)
     try:
         joined = star_left_join(
             o,
@@ -212,7 +224,6 @@ def test_star_left_join_gates_hint_per_dim(spark, sf_dir):
                 (n, c["c_nationkey"] == n["n_nationkey"]),
             ],
             select=["o_orderkey", "c_name", "n_name"],
-            broadcast_max_bytes=gate,
         )
         joined.collect()
         plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -281,6 +292,44 @@ def test_contamination_benchmark_side_broadcasts(spark, sf_dir):
     # only shuffle is the final per-doc count
     assert "BroadcastHashJoin" in plan
     assert plan.count("Exchange hashpartitioning") <= 2  # bench distinct + final agg
+
+
+def _broadcast_subtrees(final: str) -> list[str]:
+    """The text under each BroadcastExchange of a physical plan string:
+    the node's line plus every following line indented deeper."""
+    lines = final.splitlines()
+    depth = [len(l) - len(l.lstrip(" :+-")) for l in lines]
+    out = []
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" not in line:
+            continue
+        j = i + 1
+        while j < len(lines) and depth[j] > depth[i]:
+            j += 1
+        out.append("\n".join(lines[i:j]))
+    return out
+
+
+def test_checkpointed_build_sides_broadcast(spark, sf_dir):
+    """The eagerly checkpointed build sides keep their broadcast: the
+    embedding-LSH contamination screen broadcasts the benchmark
+    buckets and never a frame carrying corpus vectors, and IVF search
+    broadcasts the checkpointed query cells. A checkpoint keeps its
+    pre-checkpoint estimate, so without maybe_broadcast Spark picks
+    the build side from a wrong size."""
+    for name, build_col, stream_col in [
+        ("contamination_embedding_lsh_q", "__bvec", "__cvec"),
+        ("ann_ivf", "__qvec", "__cvec"),
+    ]:
+        spec = REGISTRY.get(name) or UNREGISTERED[name]
+        df = spec.fn(spark, sf_dir)
+        df.collect()  # AQE finalizes on execution
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        subtrees = _broadcast_subtrees(final)
+        assert any(build_col in t for t in subtrees), f"{name}:\n{final[:1500]}"
+        for t in subtrees:
+            assert stream_col not in t, f"{name} broadcasts {stream_col}:\n{t[:800]}"
 
 
 def test_corpus_sample_partial_topk_before_shuffle(spark, sf_dir):
@@ -773,50 +822,6 @@ def test_plan_summary_counts_known_shapes(spark, sf_dir):
     assert s3["broadcast_joins"] == 1 and s3["bnl_joins"] == 0
 
 
-def test_maybe_broadcast_probes_unheld_rdd_leaves(spark, monkeypatch):
-    """r8 review fix: a sentinel-stats frame whose leaves are 'local'
-    only because they are LogicalRDDs is no longer force-hinted on
-    faith — un-persisted frames must pass a bounded row/byte probe
-    (an actually-huge driver-local frame stops at the row cap and
-    stays unhinted). Model-sized frames keep the documented hint, and
-    block-manager-held checkpoints hint without any probe."""
-    from pyspark.sql import functions as SF
-
-    from udacity_data_engineering_capstone_project_spark.operators import relational
-    from udacity_data_engineering_capstone_project_spark.operators.relational import (
-        maybe_broadcast,
-    )
-
-    rdd = spark.sparkContext.parallelize([(i, "x") for i in range(10)])
-    unheld = spark.createDataFrame(rdd, "id bigint, tag string")
-
-    # model-sized: the probe admits it -> hinted (the rules idiom)
-    assert maybe_broadcast(unheld) is not unheld
-
-    # simulate "huge driver-local frame" by shrinking the probe cap:
-    # a FRESH frame (the verdict memoizes onto the object — r8 review
-    # fix) overflows the cap -> stays unhinted; the already-probed
-    # frame keeps its cached OK without re-running the job
-    monkeypatch.setattr(relational, "_LOCAL_PROBE_MAX_ROWS", 5)
-    unheld2 = spark.createDataFrame(
-        spark.sparkContext.parallelize([(i, "x") for i in range(10)]),
-        "id bigint, tag string",
-    )
-    assert maybe_broadcast(unheld2) is unheld2
-    assert maybe_broadcast(unheld) is not unheld  # memoized verdict
-
-    # block-manager-held checkpoint: hinted from storage truth, no
-    # probe involved (cap still shrunk)
-    held = unheld.localCheckpoint(eager=True)
-    assert maybe_broadcast(held) is not held
-
-    # sentinel stats above a groupBy over a model frame: still hinted
-    local = spark.createDataFrame([(1, "x")], "id bigint, tag string")
-    agg = local.groupBy("id").agg(SF.count(SF.lit(1)).alias("n"))
-    monkeypatch.setattr(relational, "_LOCAL_PROBE_MAX_ROWS", 1 << 18)
-    assert maybe_broadcast(agg) is not agg
-
-
 def test_linter_flags_oversized_broadcast_hint(spark, sf_dir, monkeypatch):
     """VERDICT r6 #3 companion: an explicit F.broadcast over a side
     the optimizer sizes ABOVE the ceiling is an error (a forced
@@ -890,45 +895,6 @@ def test_surrogate_key_window_idiom_stays_warning(spark, sf_dir, monkeypatch):
     )
 
 
-def test_probe_memo_keyed_by_budget(spark, monkeypatch):
-    """r9 review fix: the smallness-probe verdict memoized on the frame
-    is keyed by the budget in force — a frame probed OK under the
-    default budget must RE-probe (and decline) after the shared global
-    shrinks (the documented retune path, e.g. a 100x simulation). A
-    stale OK would yield an over-budget broadcast hint."""
-    from udacity_data_engineering_capstone_project_spark.operators import relational
-    from udacity_data_engineering_capstone_project_spark.operators.relational import (
-        maybe_broadcast,
-    )
-
-    rdd = spark.sparkContext.parallelize([(i, "x" * 64) for i in range(50)])
-    df = spark.createDataFrame(rdd, "id bigint, tag string")
-    assert maybe_broadcast(df) is not df  # probed OK under default
-    assert isinstance(df._sg_probe_ok, tuple)  # (budget, verdict)
-    monkeypatch.setattr(relational, "DEFAULT_BROADCAST_MAX_BYTES", 16)
-    assert maybe_broadcast(df) is df  # re-probed under the new budget
-
-
-def test_probe_declines_wide_frame_without_full_take(spark, monkeypatch):
-    """r9 review fix: the DECLINE path of the smallness probe must not
-    materialize the full row cap — a wide frame (KB-sized rows) whose
-    sampled density already blows the budget declines right after the
-    density sample (the old single take() collected up to 262k rows to
-    the driver just to say no)."""
-    from udacity_data_engineering_capstone_project_spark.operators import relational
-
-    monkeypatch.setattr(relational, "_LOCAL_PROBE_SAMPLE_ROWS", 8)
-    rdd = spark.sparkContext.parallelize(
-        [(i, "x" * 1024) for i in range(100)]
-    )
-    df = spark.createDataFrame(rdd, "id bigint, tag string")
-    calls = []
-    orig_take = df.take
-    df.take = lambda n: calls.append(n) or orig_take(n)
-    assert relational._probe_frame_is_small(df, max_bytes=4096) is False
-    assert calls == [9], calls  # density sample only — never the cap
-
-
 def test_linter_ceiling_tracks_runtime_gate(spark, sf_dir, monkeypatch):
     """r9 review fix: the lint ceiling reads the runtime gate's
     constant at CALL time — retuning
@@ -953,28 +919,6 @@ def test_linter_ceiling_tracks_runtime_gate(spark, sf_dir, monkeypatch):
     assert "oversized-broadcast-hint" in {
         f["rule"] for f in lint_plan(forced)
     }
-
-
-def test_probe_accepts_midsize_frame_within_budget(spark):
-    """r9 self-review regression: a driver-local frame BETWEEN the
-    density sample and the row cap whose real pickled size fits the
-    budget must keep the broadcast hint — the first two-stage cut
-    extrapolated density to the row CAP and wrongly declined every
-    such frame (10k rows x ~200 B pickles to ~2 MB vs a 32 MB accept
-    bound)."""
-    from udacity_data_engineering_capstone_project_spark.operators import relational
-    from udacity_data_engineering_capstone_project_spark.operators.relational import (
-        maybe_broadcast,
-    )
-
-    rdd = spark.sparkContext.parallelize(
-        [(i, "x" * 150) for i in range(10_000)], 4
-    )
-    df = spark.createDataFrame(rdd, "id bigint, tag string")
-    assert relational._probe_frame_is_small(
-        df, relational.DEFAULT_BROADCAST_MAX_BYTES
-    )
-    assert maybe_broadcast(df) is not df
 
 
 def test_single_split_inputs_spread_before_cpu_stages(spark, sf_dir):

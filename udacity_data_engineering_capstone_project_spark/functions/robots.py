@@ -144,20 +144,9 @@ def robots_rules_df(
             rows.append(
                 (host.lower(), robots_like_pattern(pattern), len(pattern), allow)
             )
-    out = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "host string, like_pattern string, pattern_len int, allow boolean"
     )
-    # builder-known size (r8): the frame came from THIS driver list,
-    # so annotate its payload bytes for maybe_broadcast's zero-job
-    # fast path (the un-persisted-LogicalRDD probe otherwise costs a
-    # job per gate check). UTF-8 bytes, not chars (review fix), plus
-    # 64/row for int+bool+struct overhead; maybe_broadcast additionally
-    # hints only below a quarter of the budget to absorb JVM
-    # serialization overhead the annotation cannot see.
-    out._sg_local_bytes = sum(
-        len(h.encode()) + len(lp.encode()) + 64 for h, lp, _, _ in rows
-    )
-    return out
 
 
 def with_robots_verdict(
@@ -178,11 +167,15 @@ def with_robots_verdict(
     nondeterministic under shuffle/retry, review finding).
     Unmatched / ruleless / unparseable-host URLs are allowed.
 
-    Scale posture: the rule frame is broadcast via the SIZE-GATED
-    ``maybe_broadcast`` — a per-pipeline rules set (hosts x a handful
-    of rules) always takes the broadcast fast path, while a web-scale
-    robots census (10^8 hosts x dozens of rules) exceeds the gate and
-    degrades to a shuffle join on host instead of a broadcast OOM.
+    Scale posture: the per-host rule table is checkpointed eagerly
+    and broadcast via the SIZE-GATED ``maybe_broadcast``, which reads
+    its real size from the block manager (a rule frame built on the
+    driver has no size estimate, so without the hint the planner
+    would shuffle the URL side before AQE saw the rules were small).
+    A per-pipeline rules set (hosts x a handful of rules) takes the
+    broadcast path, while a web-scale robots census (10^8 hosts x
+    dozens of rules) exceeds the gate and degrades to a shuffle join
+    on host instead of a broadcast OOM.
 
     The rules frame's join key is renamed to a reserved name before
     the join: a plain ``drop("host")`` after the join would remove
@@ -200,11 +193,8 @@ def with_robots_verdict(
                 )
             ).alias("__rset")
         )
+        .localCheckpoint(eager=True)
     )
-    # the host-agg only REPACKS the same cells (one row per host), so
-    # the builder-known byte annotation propagates unchanged
-    if getattr(rules, "_sg_local_bytes", None) is not None:
-        rules_by_host._sg_local_bytes = rules._sg_local_bytes
     work = df.withColumn("__host", url_host(F.col(url_col))).withColumn(
         "__path", F.coalesce(url_path(F.col(url_col)), F.lit("/"))
     )

@@ -1,10 +1,14 @@
 """Relational core: joins, argmax/top-k-per-group, nested aggregation
 (reference: J1-J9, A1-A8, SURVEY.md §2.4-2.5).
 
-Scale posture: dim joins take a SIZE-GATED broadcast hint
-(`maybe_broadcast` — the reference's 52-622-row dims are hinted, a
-dim_person-scale dim or a 100x-grown input falls back to shuffle/AQE,
-SURVEY.md §4); the argmax is a single window pass instead of the
+Scale posture: joins carry no broadcast hints. The planner's
+autoBroadcastJoinThreshold and AQE pick broadcast or shuffle per join
+from the sizes they see, so the reference's 52-622-row dims broadcast
+and a dim_person-scale dim or a 100x-grown input shuffles (SURVEY.md
+§4). `maybe_broadcast` is only for eagerly checkpointed frames, whose
+size neither can see; callers checkpoint a driver-built or exploded
+build side (robots rules, the fuzzy dim's key neighborhood) so that it
+can be sized. The argmax is a single window pass instead of the
 reference's two-aggregation + self-join formulation (`etl.py:181-204`),
 halving the shuffles. The join formulation is kept as `argmax_join`
 because its semantics differ (it preserves ties) and it serves as a
@@ -18,10 +22,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Ceiling for a *forced* broadcast hint. Matches the order of magnitude
-# of spark.sql.autoBroadcastJoinThreshold's intent (fit comfortably in
-# every executor), not its conservative 10 MB default: a hint skips the
-# optimizer's own stats check, so the gate lives here instead.
+# Ceiling for a forced broadcast hint, the same 64 MB the session sets
+# as spark.sql.autoBroadcastJoinThreshold: a hint skips the planner's
+# own size check, so `maybe_broadcast` and the plan linter apply this
+# one instead.
 DEFAULT_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 #: Estimates at/above this are sentinel-propagated garbage, not real
@@ -31,105 +35,30 @@ _SENTINEL_FLOOR = 1 << 60
 
 #: Logical leaves that are driver-local by construction; their unknown
 #: size means "a few in-memory rows", not an unstatted external table.
-#: LogicalRDD is included (matching quality._LOCAL_LEAF_NODES): python
-#: createDataFrame frames arrive RDD-backed, and they are the
-#: rules/model-frame case this resolution exists for. The residual
-#: risk — a huge localCheckpoint'd frame also reads as LogicalRDD —
-#: is bounded by the caller: checkpointed frames in this engine are
-#: pair/model outputs, and a caller who hands a checkpointed fact
-#: table to a dim-join helper had a forced broadcast before this gate
-#: existed.
+#: The plan linter and the quality gate read this set. LogicalRDD is
+#: included because python createDataFrame frames arrive RDD-backed.
 _LOCAL_LEAF_NODES = frozenset(
     {"LocalRelation", "OneRowRelation", "Range", "LogicalRDD"}
 )
 
 
-def materialized_size_bytes(df: DataFrame) -> int | None:
-    """The ACTUAL storage size of a materialized (localCheckpoint'ed /
-    persisted) frame, read from the block manager — or None when the
-    plan is not a single persisted-RDD leaf.
+def materialized_size_bytes(plan, sc) -> int | None:
+    """The block-manager storage size of a logical ``plan`` that is one
+    held LogicalRDD leaf (a ``localCheckpoint``ed or persisted RDD), or
+    None for any other plan and for blocks that are not held.
 
-    Why this exists: `localCheckpoint(eager=True)` replaces the plan
-    with a LogicalRDD but CARRIES THE PRE-CHECKPOINT STATS ESTIMATE
-    through — a probe frame whose un-materialized estimate rode
-    through a crossJoin still "estimates" tens of GB after the
-    checkpoint even though its blocks total a few KB (review-confirmed
-    live: 35.9 GB estimate vs 3 944 actual bytes). The block manager
-    knows the truth, so size gates should prefer it.
+    `localCheckpoint(eager=True)` replaces the plan with a LogicalRDD
+    but keeps the pre-checkpoint stats estimate: a probe frame whose
+    estimate rode through a crossJoin still reads as 35.9 GB after the
+    checkpoint although its blocks total 3,944 bytes. The block manager
+    has the real size.
     """
     try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        leaves = plan.collectLeaves()
         if leaves.size() != 1 or leaves.apply(0).nodeName() != "LogicalRDD":
             return None
-        return _rdd_leaf_storage_bytes(df, leaves.apply(0))
-    except Exception:
-        return None
-
-
-#: Row ceiling for the bounded smallness probe of sentinel-stats
-#: frames with un-persisted LogicalRDD leaves. Model/rules frames are
-#: thousands of rows; anything past this is not a hint candidate.
-_LOCAL_PROBE_MAX_ROWS = 1 << 18
-
-
-#: First-stage sample size for the smallness probe: enough rows to
-#: estimate per-row density, small enough that even KB-wide text rows
-#: cost only a few MB of driver memory.
-_LOCAL_PROBE_SAMPLE_ROWS = 4096
-
-
-def _probe_frame_is_small(df: DataFrame, max_bytes: int) -> bool:
-    """Cheap residual guard (r8, review finding) for a frame whose only
-    size signal is 'all leaves are driver-local': accept the hint only
-    when the frame ends within the row cap AND its pickled bytes fit
-    half the budget (pickle over-counts per-row Row overhead, so the
-    bound errs conservative).
-
-    Two-stage (r9, review finding): a single take(row_cap+1) fully
-    collected up to 262k rows to the driver JUST to decline a wide
-    frame — 200k rows of KB-sized text spiked driver memory 2-3x the
-    frame size on the decline path. Stage 1 samples a few thousand
-    rows to estimate per-row density; stage 2 takes only as many rows
-    as could POSSIBLY fit the budget at that density (never more than
-    the row cap) — a frame that ends within that limit is measured
-    exactly (so mid-sized frames that fit keep their hint — the first
-    r9 cut extrapolated to the CAP and wrongly declined every
-     4k-262k-row frame wider than ~128 B/row), while a frame that
-    overflows it declines having materialized at most ~budget/2 of
-    row data. Density drift past the sample can only cause a
-    conservative decline, never an over-budget accept: acceptance is
-    always decided by pickling the FULL take.
-    """
-    try:
-        import pickle
-
-        cap = _LOCAL_PROBE_MAX_ROWS
-        sample_n = min(_LOCAL_PROBE_SAMPLE_ROWS, cap)
-        rows = df.take(sample_n + 1)
-        if len(rows) <= sample_n:
-            return len(pickle.dumps(rows)) <= max_bytes // 2
-        if sample_n == cap:
-            return False  # already past the row cap
-        sample_bytes = len(pickle.dumps(rows[:sample_n]))
-        per_row = max(sample_bytes / sample_n, 1.0)
-        fits = int((max_bytes // 2) / per_row)
-        limit = min(cap, fits)
-        if limit <= sample_n:
-            return False  # even the sample exceeds the budget's rows
-        rows = df.take(limit + 1)
-        if len(rows) > limit:
-            return False  # over the cap, or over budget at density
-        return len(pickle.dumps(rows)) <= max_bytes // 2
-    except Exception:
-        return False
-
-
-def _rdd_leaf_storage_bytes(df: DataFrame, leaf) -> int | None:
-    """Block-manager storage size for one LogicalRDD leaf, or None when
-    its blocks are not held (un-persisted / evicted — size unknowable)."""
-    try:
-        rdd_id = leaf.rdd().id()
-        infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+        rdd_id = leaves.apply(0).rdd().id()
+        infos = sc._jsc.sc().getRDDStorageInfo()
         for i in range(len(infos)):
             if infos[i].id() == rdd_id:
                 return int(infos[i].memSize()) + int(infos[i].diskSize())
@@ -141,149 +70,55 @@ def _rdd_leaf_storage_bytes(df: DataFrame, leaf) -> int | None:
 def maybe_broadcast(
     df: DataFrame, max_bytes: int | None = None
 ) -> DataFrame:
-    """Size-gated broadcast hint: apply ``F.broadcast`` only when the
-    optimizer's own size estimate for ``df``'s plan is at most
-    ``max_bytes``.
+    """Broadcast hint for an eagerly checkpointed frame: ``F.broadcast``
+    when ``df`` is at most ``max_bytes`` (default
+    `DEFAULT_BROADCAST_MAX_BYTES`, read at call time), else ``df``
+    unchanged.
 
-    A bare ``F.broadcast(...)`` is a scale landmine: it overrides every
-    stats check, so a table that is broadcast-sized at test SF (e.g.
-    customer = 1/10 of lineitem) becomes a multi-GB forced broadcast
-    into every executor at 100x. This helper keeps the hint's benefit
-    (no shuffle of the big side, no reliance on runtime AQE conversion)
-    while bounding it with the same statistics Catalyst uses for
-    auto-broadcast: `LogicalPlan.stats.sizeInBytes`, which is file-size
-    based for parquet scans (cheap, driver-side, no job) and propagates
-    through filters/projections.
-
-    When the estimate is unavailable (e.g. Spark Connect, where the
-    plan is remote) or too large, the input is returned UNHINTED — the
-    safe default, since AQE still converts to broadcast-hash at runtime
-    from the actual shuffle sizes when the side turns out small.
-
-    Sentinel handling: Spark reports "no stats" as Long.MaxValue, and
-    python-side LocalRelations carry that sentinel — worse, operators
-    ABOVE one propagate it as a garbage near-MaxValue "estimate" (a
-    groupBy over a createDataFrame frame reads as ~5 EB). Any estimate
-    above `_SENTINEL_FLOOR` (1 EiB — nothing real broadcasts at that
-    scale) is therefore resolved by the plan's LEAVES: all-local
-    leaves mean driver-memory-sized data (hint it — that is exactly
-    the rules/model-frame case), while any external leaf means the
-    size is genuinely unknowable (stay unhinted). LogicalRDD leaves
-    additionally require block-manager-held blocks whose total fits
-    the budget (r8): an un-persisted createDataFrame or an evicted
-    checkpoint is NOT provably small just because it is driver-local.
+    Everywhere else the planner's autoBroadcastJoinThreshold and AQE
+    choose the join strategy from the sizes they see. A checkpoint
+    hides its size from both: the LogicalRDD keeps the pre-checkpoint
+    estimate, which through an explode or a self-join reads as GBs for
+    a few KB of rows, so the build side would be picked from a wrong
+    number; a frame built on the driver, or exploded, has no usable
+    estimate at all, so callers checkpoint it first. This helper reads
+    the block manager when ``df`` is one held checkpoint, and the
+    optimizer estimate otherwise; with no estimate (Spark's no-stats
+    sentinel, or a remote plan) ``df`` stays unhinted.
     """
     if max_bytes is None:
-        # read the module constant at CALL time so a deployment (or a
-        # plan test simulating 100x inputs) can retune one global
         max_bytes = DEFAULT_BROADCAST_MAX_BYTES
-    # builder-annotated size (r8): a frame constructed FROM a driver
-    # list knows its own payload bytes at build time — builders stash
-    # `_sg_local_bytes` (and propagate it through shrinking reshapes)
-    # so the gate needs zero JVM calls and, crucially, zero probe JOBS
-    # (the un-persisted-LogicalRDD probe below cost robots_filter_q
-    # ~0.4 s/invocation before this fast path). The annotation counts
-    # PAYLOAD bytes, not serialized JVM size (UTF8String + unsafe-row
-    # struct overhead) — so the hint only triggers below a QUARTER of
-    # the budget (review finding r8: a near-gate annotation could
-    # force a multiple-of-annotated broadcast); clearly-over-budget
-    # declines outright, and the ambiguous middle falls through to the
-    # stats/block-manager/probe path.
-    known = getattr(df, "_sg_local_bytes", None)
-    if known is not None:
-        if known <= max_bytes // 4:
-            return F.broadcast(df)
-        if known > max_bytes:
-            return df
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
-        est = plan.stats().sizeInBytes()
-        # py4j maps scala BigInt to int when it fits; stringify otherwise
-        est = est if isinstance(est, int) else int(est.toString())
-        if est > max_bytes:
-            # an over-budget estimate on a MATERIALIZED frame is often
-            # inherited garbage (localCheckpoint carries the
-            # pre-checkpoint stats through) — the block manager has
-            # the real number; gate on that when available
-            actual = materialized_size_bytes(df)
-            if actual is not None:
-                return F.broadcast(df) if actual <= max_bytes else df
-        if est >= _SENTINEL_FLOOR:
-            leaves = plan.collectLeaves()
-            known_bytes, unheld_rdd = 0, False
-            for i in range(leaves.size()):
-                name = leaves.apply(i).nodeName()
-                if name not in _LOCAL_LEAF_NODES:
-                    return df  # unstatted external source: assume huge
-                if name == "LogicalRDD":
-                    # a LogicalRDD leaf is only PROVABLY small when the
-                    # block manager holds its blocks (r8, review
-                    # finding): a large un-persisted frame or an
-                    # EVICTED checkpoint also reads as "local leaves".
-                    # Note Spark 4's Arrow createDataFrame path makes
-                    # every model/rules frame a LogicalRDD, so these
-                    # cannot simply stay unhinted — they get the
-                    # bounded probe below instead.
-                    size = _rdd_leaf_storage_bytes(df, leaves.apply(i))
-                    if size is None:
-                        unheld_rdd = True
-                    else:
-                        known_bytes += size
-            if known_bytes > max_bytes:
-                return df
-            if unheld_rdd:
-                # memoize (budget, verdict) ON the frame object so
-                # repeated gate checks of the same DataFrame within one
-                # plan build don't re-run the take()+pickle job — keyed
-                # by max_bytes (r9, review finding: a verdict cached
-                # under the default budget must not survive a runtime
-                # retune of DEFAULT_BROADCAST_MAX_BYTES, e.g. a 100x
-                # simulation shrinking the budget)
-                cached = getattr(df, "_sg_probe_ok", None)
-                if isinstance(cached, tuple) and cached[0] == max_bytes:
-                    ok = cached[1]
-                else:
-                    ok = _probe_frame_is_small(df, max_bytes)
-                    try:
-                        df._sg_probe_ok = (max_bytes, ok)
-                    except Exception:
-                        pass
-                if not ok:
-                    return df
-            return F.broadcast(df)  # fully driver-local: sentinel lies
+        size = materialized_size_bytes(plan, df.sparkSession.sparkContext)
+        if size is None:
+            est = plan.stats().sizeInBytes()
+            # py4j maps scala BigInt to int when it fits
+            size = est if isinstance(est, int) else int(est.toString())
     except Exception:
         return df
-    return F.broadcast(df) if est <= max_bytes else df
+    if size >= _SENTINEL_FLOOR:
+        return df
+    return F.broadcast(df) if size <= max_bytes else df
 
 
 def star_left_join(
     fact: DataFrame,
     dims: Sequence[tuple[DataFrame, Sequence[Column] | Sequence[str] | Column]],
     select: Sequence[Column | str] | None = None,
-    broadcast_max_bytes: int | None = -1,
 ) -> DataFrame:
     """Chain left joins fact <- dim_1 <- ... <- dim_n, preserving every
     fact row (reference fact build, `etl.py:285-293`: "Each entry ...
     should be preserved").
 
-    Each dim is broadcast-hinted PER DIM via `maybe_broadcast`: the
-    reference's real dims (52-622 rows, `etl.py:221-269`) always get
-    the hint, while a fact-sized dim like dim_person (5.4M rows, 1:1
-    with the fact, `etl.py:242-249`) exceeds the gate and joins via
-    shuffle/AQE instead — at 100x an unconditional hint there would
-    force a 540M-row broadcast. ``broadcast_max_bytes=None`` disables
-    hinting entirely; the default (-1) uses the module-level
-    ``DEFAULT_BROADCAST_MAX_BYTES`` read at call time.
+    The planner and AQE choose each dim's join strategy: the
+    reference's real dims (52-622 rows, `etl.py:221-269`) fall under
+    the broadcast threshold, while a fact-sized dim like dim_person
+    (5.4M rows, 1:1 with the fact, `etl.py:242-249`) is shuffle-joined.
     """
     out = fact
     for dim, on in dims:
-        if broadcast_max_bytes is None:
-            d = dim
-        elif broadcast_max_bytes == -1:
-            d = maybe_broadcast(dim)
-        else:
-            d = maybe_broadcast(dim, broadcast_max_bytes)
-        out = out.join(d, on=on, how="left")
+        out = out.join(dim, on=on, how="left")
     if select is not None:
         out = out.select(*select)
     return out

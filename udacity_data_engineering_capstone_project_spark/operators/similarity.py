@@ -931,10 +931,11 @@ def ivf_topk(
     # estimate for the un-materialized frame rides through
     # assign_cells' crossJoin and reads as tens of GB for a handful of
     # queries, so a bare F.broadcast here was an UNSIZED hint (caught
-    # by the oversized-broadcast-hint lint rule, r7). After the eager
-    # checkpoint the frame is leaf-sized and maybe_broadcast gates it
-    # honestly — an actually-huge query batch degrades to a shuffle
-    # join instead of a forced executor-resident copy.
+    # by the oversized-broadcast-hint lint rule, r7). The checkpoint
+    # keeps that estimate, so neither the planner nor AQE can size the
+    # frame; maybe_broadcast reads its size from the block manager, and
+    # an actually-huge query batch stays unhinted (a shuffle join)
+    # instead of a forced executor-resident copy.
     q = _with_norm(
         query_cells.select(
             F.col(id_col).alias(query_id), F.col(vec_col).alias("__qvec"), F.col("cell")
@@ -1313,9 +1314,10 @@ def contamination_screen(
 
     **lsh** (the fallback past the broadcast budget): the benchmark's
     multi-table hyperplane buckets (`hyperplane_lsh_buckets`, the
-    splitmix64 plane family) explode and broadcast under a
-    `maybe_broadcast` gate discounted by the num_tables explode
-    inflation; the corpus explodes its buckets in the scan stage,
+    splitmix64 plane family) explode and are broadcast by
+    `maybe_broadcast` when the optimizer's estimate times the
+    num_tables explode fan-out (which the estimate leaves out) fits
+    the budget; the corpus explodes its buckets in the scan stage,
     broadcast-joins on (table, bucket), verifies exact cosine with a
     vectorized Arrow kernel, and one partial-aggregatable min-struct
     groupBy keeps the best match (the only shuffle, match-sized).
@@ -1470,10 +1472,11 @@ def contamination_screen(
         bench = bench.join(
             sizes.filter(F.col("__bn") <= cap), on="__tb"
         ).drop("__bn")
-    # each benchmark row explodes into num_tables bucket rows, every
-    # one carrying the full vector payload — discount the broadcast
-    # budget by that inflation so the gate reasons about post-explode
-    # bytes (the fuzzy_join_reference lesson)
+    # pin the benchmark as the build side: without the hint the
+    # planner broadcasts the corpus vectors instead. Spark does not
+    # scale a Generate's estimate by its fan-out, and each benchmark
+    # row explodes into num_tables bucket rows that each carry the
+    # full vector, so the budget is divided by num_tables.
     bench = maybe_broadcast(
         bench, max_bytes=DEFAULT_BROADCAST_MAX_BYTES // max(num_tables, 1)
     )

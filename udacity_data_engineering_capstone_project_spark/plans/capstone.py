@@ -42,10 +42,7 @@ from udacity_data_engineering_capstone_project_spark.operators.quality import (
     expect_distinct_count,
     expect_row_count,
 )
-from udacity_data_engineering_capstone_project_spark.operators.relational import (
-    maybe_broadcast,
-    top_per_group,
-)
+from udacity_data_engineering_capstone_project_spark.operators.relational import top_per_group
 from udacity_data_engineering_capstone_project_spark.plans.star import build_dimension, build_fact
 
 #: Valid US states (reference `etl.py:21-25`).
@@ -169,7 +166,7 @@ def build_state_temperature(
     )
 
     state_temp = temp_by_coord.join(
-        maybe_broadcast(dominant),
+        dominant,
         on=[
             temp_by_coord["lat"] == dominant["latitude"],
             temp_by_coord["long"] == dominant["longitude"],
@@ -346,7 +343,7 @@ def incremental_capstone_update(
 def analyst_query(fact_imm: DataFrame, fact_temp: DataFrame) -> DataFrame:
     """The reference's analyst query (nb cell 46): tourists + average
     temperature per (month, state), busiest first."""
-    joined = fact_imm.join(maybe_broadcast(fact_temp), on="id_temp")
+    joined = fact_imm.join(fact_temp, on="id_temp")
     return (
         joined.groupBy("month", "state")
         .agg(

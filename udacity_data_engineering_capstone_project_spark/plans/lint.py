@@ -45,8 +45,11 @@ function instead of a review habit, so a pipeline can gate CI on
   ceiling (or cannot size and the side reads an external source). A
   bare ``F.broadcast`` skips every stats check, so a side that is
   broadcast-sized at test SF becomes a multi-GB forced broadcast into
-  every executor at 100x; route hints through ``maybe_broadcast``
-  (``operators/relational.py``) instead.
+  every executor at 100x; leave the choice to the planner's
+  threshold and AQE instead. A materialized side is sized from the
+  block manager, the way ``maybe_broadcast``
+  (``operators/relational.py``) sizes the checkpointed frames it
+  hints.
 
 The linter reads the ANALYZED logical plan (rules about intent) plus
 the executed plan string (rules about physical strategy) — both
@@ -77,10 +80,9 @@ from pyspark.sql import DataFrame
 #: the small-dimension surrogate-key idiom and becomes a one-task wall.
 GLOBAL_WINDOW_MAX_BYTES = 64 * 1024 * 1024
 
-# Sentinel floor + local-leaf classification + broadcast ceiling are
-# SHARED with operators.relational (one definition — the r7 review
-# flagged the drift risk of per-module copies; r8 extends that to the
-# broadcast ceiling, which was still a mirrored literal).
+# Sentinel floor, local-leaf classification, broadcast ceiling and the
+# block-manager size read are SHARED with operators.relational (one
+# definition each, so linter and gate cannot drift apart).
 from udacity_data_engineering_capstone_project_spark.operators import relational as _relational  # noqa: E402
 from udacity_data_engineering_capstone_project_spark.operators.relational import (  # noqa: E402
     _LOCAL_LEAF_NODES as _SHARED_LOCAL_LEAVES,
@@ -137,26 +139,6 @@ def _leaf_resolved_size(plan) -> tuple[int, bool]:
         except Exception:
             external = True
     return est, external
-
-
-def _materialized_plan_size(plan, sc) -> int | None:
-    """Block-manager truth for a single persisted-LogicalRDD subtree
-    (the plan-node twin of relational.materialized_size_bytes):
-    localCheckpoint carries the pre-checkpoint estimate through, so an
-    'oversized' hinted side may really be a few KB of materialized
-    probe rows."""
-    try:
-        leaves = plan.collectLeaves()
-        if leaves.size() != 1 or leaves.apply(0).nodeName() != "LogicalRDD":
-            return None
-        rdd_id = leaves.apply(0).rdd().id()
-        infos = sc._jsc.sc().getRDDStorageInfo()
-        for i in range(len(infos)):
-            if infos[i].id() == rdd_id:
-                return int(infos[i].memSize()) + int(infos[i].diskSize())
-    except Exception:
-        return None
-    return None
 
 
 #: Strips Catalyst expression ids (`buckets#123` -> `buckets`) so one
@@ -382,8 +364,8 @@ def lint_plan(df: DataFrame) -> list[dict]:
 
     # Broadcast-hint sizing reads the OPTIMIZED plan: the optimizer
     # folds ResolvedHint nodes into each Join's JoinHint, and its
-    # stats are the same post-pruning estimates maybe_broadcast gates
-    # on (analyzed-plan stats would over-report un-pruned subtrees).
+    # stats are the post-pruning estimates the planner itself uses
+    # (analyzed-plan stats would over-report un-pruned subtrees).
     for node, _parent in _walk(qe.optimizedPlan()):
         if _simple_name(node) != "Join":
             continue
@@ -412,7 +394,7 @@ def lint_plan(df: DataFrame) -> list[dict]:
             if est > hint_max and not sentinel:
                 # an inherited-garbage estimate on a materialized
                 # frame: prefer the block manager's truth
-                actual = _materialized_plan_size(
+                actual = _relational.materialized_size_bytes(
                     child, df.sparkSession.sparkContext
                 )
                 if actual is not None and actual <= hint_max:
@@ -433,7 +415,8 @@ def lint_plan(df: DataFrame) -> list[dict]:
                                 f"(> {hint_max} B)"
                             )
                             + "; a forced broadcast skips every stats "
-                            "check — size-gate it via maybe_broadcast"
+                            "check — drop the hint and let the planner and AQE "
+                            "choose"
                         ),
                     }
                 )

@@ -18,7 +18,6 @@ from udacity_data_engineering_capstone_project_spark.operators.cleaning import n
 from udacity_data_engineering_capstone_project_spark.operators.relational import (
     argmax_join,
     avg_of_avgs,
-    maybe_broadcast,
     top_per_group,
 )
 from udacity_data_engineering_capstone_project_spark.plans.star import build_dimension, build_fact
@@ -261,7 +260,7 @@ def argmax_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
 def star_schema_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    base = o.join(maybe_broadcast(c), o["o_custkey"] == c["c_custkey"]).select(
+    base = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice", "c_mktsegment"
     )
     dim_segment = build_dimension(base, ["c_mktsegment"], "id_segment")
@@ -328,7 +327,7 @@ def analyst_top_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     joined = li.join(o, li["l_orderkey"] == o["o_orderkey"]).join(
-        maybe_broadcast(c), o["o_custkey"] == c["c_custkey"]
+        c, o["o_custkey"] == c["c_custkey"]
     )
     return (
         joined.groupBy(
@@ -377,7 +376,7 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(maybe_broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.round(F.sum(revenue), 2).alias("revenue"))
         .select(
@@ -421,14 +420,14 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(maybe_broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
         .join(
-            maybe_broadcast(s),
+            s,
             (li["l_suppkey"] == s["s_suppkey"])
             & (s["s_nationkey"] == c["c_nationkey"]),
         )
-        .join(maybe_broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(maybe_broadcast(r), n["n_regionkey"] == r["r_regionkey"])
+        .join(n, c["c_nationkey"] == n["n_nationkey"])
+        .join(r, n["n_regionkey"] == r["r_regionkey"])
         .groupBy("n_name")
         .agg(
             F.round(F.sum(revenue), 2).alias("revenue"),
@@ -474,7 +473,7 @@ def bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = bucketize(_t(spark, sf_dir, "customer"), "c_acctbal", "c_nationkey", "avg_cust_bal", "n_cust")
     supp = bucketize(_t(spark, sf_dir, "supplier"), "s_acctbal", "s_nationkey", "avg_supp_bal", "n_supp")
-    return cust.join(maybe_broadcast(supp), on=["bucket", "nk"]).select(
+    return cust.join(supp, on=["bucket", "nk"]).select(
         "bucket", "nk", "avg_cust_bal", "n_cust", "avg_supp_bal", "n_supp"
     )
 

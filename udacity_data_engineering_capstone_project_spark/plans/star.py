@@ -50,7 +50,7 @@ def build_fact(
     """Assemble a fact table: left-join every dim (row-preserving,
     reference `etl.py:285-293`), keep the surrogate keys + measures.
 
-    Dims are size-gated per dim (`maybe_broadcast`): real dims get the
-    broadcast hint, a dim_person-scale dim (1:1 with the fact,
-    `etl.py:242-249`) falls back to shuffle/AQE."""
+    The planner and AQE choose each dim's join: real dims fall under
+    the broadcast threshold, a dim_person-scale dim (1:1 with the
+    fact, `etl.py:242-249`) is shuffle-joined."""
     return star_left_join(base, dims, select=keep)
