@@ -37,7 +37,7 @@ from udacity_data_engineering_capstone_project_spark import get_spark
 from udacity_data_engineering_capstone_project_spark.functions.robots import (
     robots_rules_df,
 )
-from udacity_data_engineering_capstone_project_spark.plans.queries import (
+from udacity_data_engineering_capstone_project_spark.plans.queries_crawl import (
     CRAWL_BLOCKLIST_PHRASES,
     _ROBOTS_TXT,
     crawl_cascade_rules,

@@ -719,6 +719,8 @@ def test_embedding_lsh_matches_duckdb_twin(spark, sf_dir):
     from udacity_data_engineering_capstone_project_spark.plans.queries import (
         REGISTRY,
         UNREGISTERED,
+    )
+    from udacity_data_engineering_capstone_project_spark.plans.queries_corpus import (
         _embedding_lsh_oracle,
     )
     from tests.oracle_utils import compare_frames, run_oracle
@@ -764,6 +766,8 @@ def test_dedup_clusters_oracle_rounds_converged(spark, sf_dir):
     from udacity_data_engineering_capstone_project_spark.plans.queries import (
         REGISTRY,
         UNREGISTERED,
+    )
+    from udacity_data_engineering_capstone_project_spark.plans.queries_dedup import (
         _dedup_clusters_oracle,
     )
     from tests.oracle_utils import compare_frames, run_oracle

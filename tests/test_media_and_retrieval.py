@@ -201,7 +201,7 @@ def test_mmr_q_decision_margins(spark, sf_dir):
     from udacity_data_engineering_capstone_project_spark.operators.similarity import (
         cosine,
     )
-    from udacity_data_engineering_capstone_project_spark.plans.queries import (
+    from udacity_data_engineering_capstone_project_spark.plans.queries_ml import (
         _MMR_K,
         _MMR_LAM,
         _MMR_POOL,

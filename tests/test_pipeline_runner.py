@@ -190,7 +190,7 @@ def test_crawl_pipeline_durable_resume(spark, sf_dir, tmp_path):
     from udacity_data_engineering_capstone_project_spark.plans.pipeline import (
         run_pipeline,
     )
-    from udacity_data_engineering_capstone_project_spark.plans.queries import (
+    from udacity_data_engineering_capstone_project_spark.plans.queries_crawl import (
         crawl_pipeline_intake,
         crawl_pipeline_stage_fns,
         crawl_pipeline_stages,

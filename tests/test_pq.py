@@ -5,6 +5,8 @@ is extension tier; paper: Jegou et al. 2011)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -153,17 +155,26 @@ def test_train_validates(spark, emb):
 
 
 def test_encode_methods_agree(emb, codebooks, codes):
-    """The numpy fast path and the pure-JVM expression path must
-    produce identical codes (same distances bit-for-bit: sequential
-    subdim accumulation; same floor(d*1e9) quantization; same
-    first-tie argmin)."""
-    expr = pq_encode(emb, codebooks, "embedding", method="expr")
-    a = {r["vec_id"]: list(r["pq_codes"]) for r in codes.collect()}
-    b = {r["vec_id"]: list(r["pq_codes"]) for r in expr.collect()}
-    assert a == b
-
-    with pytest.raises(ValueError, match="method"):
-        pq_encode(emb, codebooks, "embedding", method="nope")
+    """The numpy kernel's codes equal a plain-Python reference built
+    the way the kernel defines a code: squared distance per subspace
+    summed in subdim order, then floor(d*1e9), then the first argmin
+    (the lowest cell on a tie)."""
+    tab = {(r["sub"], r["cell"]): r["codevec"] for r in codebooks.collect()}
+    sd = 64 // M
+    got = {r["vec_id"]: list(r["pq_codes"]) for r in codes.collect()}
+    for r in emb.collect():
+        v = [float(x) for x in r["embedding"]]
+        want = []
+        for j in range(M):
+            sub = v[j * sd:(j + 1) * sd]
+            q = []
+            for c in range(K):
+                d = 0.0
+                for x, y in zip(sub, tab[(j, c)]):
+                    d += (x - y) * (x - y)
+                q.append(math.floor(d * 1e9))
+            want.append(q.index(min(q)))
+        assert got[r["vec_id"]] == want, r["vec_id"]
 
 
 def test_encode_null_vectors_both_methods(spark, codebooks):
@@ -171,12 +182,10 @@ def test_encode_null_vectors_both_methods(spark, codebooks):
         [(1, [float(i % 7) for i in range(64)]), (2, None)],
         "vec_id bigint, embedding array<double>",
     )
-    for method in ("pandas", "expr"):
-        rows = {r["vec_id"]: r["pq_codes"]
-                for r in pq_encode(df, codebooks, "embedding",
-                                   method=method).collect()}
-        assert rows[2] is None, method
-        assert len(rows[1]) == M and all(c is not None for c in rows[1]), method
+    rows = {r["vec_id"]: r["pq_codes"]
+            for r in pq_encode(df, codebooks, "embedding").collect()}
+    assert rows[2] is None
+    assert len(rows[1]) == M and all(c is not None for c in rows[1])
 
 
 def test_pq_topk_null_query_excluded(spark, codebooks, codes):

@@ -202,16 +202,17 @@ def test_caller_host_column_survives_verdict(spark):
     assert kept.columns == ["id", "url", "host"]  # row schema unchanged
 
 
-def test_rules_broadcast_is_size_gated(spark, monkeypatch, tmp_path):
+def test_rules_broadcast_is_size_gated(spark, tmp_path):
     """VERDICT r6 #3: a WEB-SCALE rules frame (external storage — a
     10^8-host robots census ships as parquet, never createDataFrame)
     must degrade to a shuffle join, not a forced broadcast. Simulate
-    100x by shrinking the maybe_broadcast gate to 1 byte: the verdict
-    stays identical and the plan carries no forced-broadcast hint.
-    Under the default gate both file-backed and driver-local rules
-    keep the hint: the per-host rule table is checkpointed, so the
-    gate reads its real size from the block manager."""
-    from udacity_data_engineering_capstone_project_spark.operators import relational
+    100x by shrinking the session's broadcast threshold, which the
+    maybe_broadcast gate reads, to 1 byte: the verdict stays identical
+    and the plan carries no forced-broadcast hint. Under the default
+    threshold both file-backed and driver-local rules keep the hint:
+    the per-host rule table is checkpointed, so the gate reads its
+    real size from the block manager."""
+    from tests.test_plan_quality import _restore_conf, _set_broadcast_threshold
 
     local_rules = robots_rules_df(
         spark, [("ex.com", "User-agent: *\nDisallow: /b")]
@@ -226,21 +227,22 @@ def test_rules_broadcast_is_size_gated(spark, monkeypatch, tmp_path):
     out_hinted = with_robots_verdict(df, rules, "url")
     assert "broadcast" in out_hinted._jdf.queryExecution().analyzed().toString().lower()
     assert {(r.id, r.robots_allowed) for r in out_hinted.collect()} == want
-    default_gate = relational.DEFAULT_BROADCAST_MAX_BYTES
-    monkeypatch.setattr(relational, "DEFAULT_BROADCAST_MAX_BYTES", 1)
-    out_gated = with_robots_verdict(df, rules, "url")
-    logical = out_gated._jdf.queryExecution().analyzed().toString()
-    assert "broadcast" not in logical.lower()  # hint NOT applied
-    assert {(r.id, r.robots_allowed) for r in out_gated.collect()} == want
-    # driver-local rules honor the gate too: a 1-byte "100x" gate
-    # declines everything
-    out_local_gated = with_robots_verdict(df, local_rules, "url")
-    assert (
-        "broadcast"
-        not in out_local_gated._jdf.queryExecution().analyzed().toString().lower()
-    )
-    # under the DEFAULT gate, driver-local rules keep the hint
-    monkeypatch.setattr(relational, "DEFAULT_BROADCAST_MAX_BYTES", default_gate)
+    prev = _set_broadcast_threshold(spark, 1)
+    try:
+        out_gated = with_robots_verdict(df, rules, "url")
+        logical = out_gated._jdf.queryExecution().analyzed().toString()
+        assert "broadcast" not in logical.lower()  # hint NOT applied
+        assert {(r.id, r.robots_allowed) for r in out_gated.collect()} == want
+        # driver-local rules honor the gate too: a 1-byte "100x"
+        # threshold declines everything
+        out_local_gated = with_robots_verdict(df, local_rules, "url")
+        assert (
+            "broadcast"
+            not in out_local_gated._jdf.queryExecution().analyzed().toString().lower()
+        )
+    finally:
+        _restore_conf(spark, prev)
+    # under the DEFAULT threshold, driver-local rules keep the hint
     out_local = with_robots_verdict(df, local_rules, "url")
     logical_local = out_local._jdf.queryExecution().analyzed().toString()
     assert "broadcast" in logical_local.lower()

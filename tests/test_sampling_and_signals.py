@@ -274,7 +274,7 @@ def test_temperature_mix_q_threshold_margin(spark, sf_dir):
     (where Python's banker's round and DuckDB's half-away round could
     disagree). Margin-headroom pattern: the guard FAILS loudly if a
     future corpus/tier change lands on the edge."""
-    from udacity_data_engineering_capstone_project_spark.plans.queries import (
+    from udacity_data_engineering_capstone_project_spark.plans.queries_text import (
         _TEMP_MIX_TIER_SQL,
     )
 

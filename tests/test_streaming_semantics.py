@@ -379,7 +379,7 @@ def test_stream_crawl_curation_matches_batch(spark, sf_dir, tmp_path):
     from udacity_data_engineering_capstone_project_spark.functions.robots import (
         robots_rules_df,
     )
-    from udacity_data_engineering_capstone_project_spark.plans.queries import (
+    from udacity_data_engineering_capstone_project_spark.plans.queries_crawl import (
         CRAWL_BLOCKLIST_PHRASES,
         _ROBOTS_TXT,
         crawl_cascade_rules,
@@ -449,7 +449,7 @@ def test_stream_crawl_dedup_merges_normalization_variants(spark, tmp_path):
     from udacity_data_engineering_capstone_project_spark.functions.robots import (
         robots_rules_df,
     )
-    from udacity_data_engineering_capstone_project_spark.plans.queries import (
+    from udacity_data_engineering_capstone_project_spark.plans.queries_crawl import (
         crawl_cascade_rules,
     )
     from udacity_data_engineering_capstone_project_spark.streaming.crawl import (
@@ -505,7 +505,7 @@ def test_stream_crawl_dedup_watermark_bounds_state(spark, tmp_path):
     from udacity_data_engineering_capstone_project_spark.functions.robots import (
         robots_rules_df,
     )
-    from udacity_data_engineering_capstone_project_spark.plans.queries import (
+    from udacity_data_engineering_capstone_project_spark.plans.queries_crawl import (
         crawl_cascade_rules,
     )
     from udacity_data_engineering_capstone_project_spark.streaming.crawl import (
@@ -573,7 +573,7 @@ def test_stream_store_token_budget_matches_batch(spark, sf_dir, tmp_path):
     from udacity_data_engineering_capstone_project_spark.functions.robots import (
         robots_rules_df,
     )
-    from udacity_data_engineering_capstone_project_spark.plans.queries import (
+    from udacity_data_engineering_capstone_project_spark.plans.queries_crawl import (
         CRAWL_BLOCKLIST_PHRASES,
         _ROBOTS_TXT,
         crawl_cascade_rules,

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from udacity_data_engineering_capstone_project_spark.operators.relational import plan_size
+
 
 class QualityError(ValueError):
     """Raised when a data-quality expectation fails (reference raises
@@ -104,7 +106,7 @@ def profile_columns(
     from pyspark.sql.types import NumericType
 
     if approximate is None:
-        approximate = _estimated_size_exceeds(df, APPROX_DRIFT_MIN_BYTES)
+        approximate = _sketch_by_default(df)
 
     # spread a narrow input before the agg: countDistinct expansion
     # and (exact-path) percentile buffering do their partial work
@@ -344,51 +346,16 @@ def category_drift(
 APPROX_DRIFT_MIN_BYTES = 1 << 30
 
 
-# Leaf node names whose Long.MaxValue size estimate means "tiny local
-# data with no stats", not "unbounded external source": python-side
-# createDataFrame relations and literal one-row plans.
-# Shared with operators.relational / plans.lint (one definition of
-# "driver-local leaf" + the garbage-estimate floor — the r7 review
-# flagged per-module copies as a drift risk).
-from udacity_data_engineering_capstone_project_spark.operators.relational import (
-    _LOCAL_LEAF_NODES,
-    _SENTINEL_FLOOR,
-)
-
-
-def _estimated_size_exceeds(df: DataFrame, threshold: int) -> bool:
-    """True if the optimizer's size estimate for ``df`` exceeds
-    ``threshold`` bytes — the exact-vs-sketch gate.
-
-    Spark reports "no stats" as Long.MaxValue rather than an error,
-    and the sentinel is AMBIGUOUS: a python-side LocalRelation (a few
-    hundred test rows) and a JDBC/DSv2 relation with
-    defaultSizeInBytes (possibly multi-TB) both report it. Resolve by
-    the plan's leaves: if every leaf is a known local/in-memory node,
-    treat unknown as small (exact path — deterministic, oracle-
-    comparable); if any leaf is an external source, treat unknown as
-    huge (sketch path — an unstatted external relation must never be
-    value-buffered in one aggregation state). On reflection failure,
-    stay exact: file scans — the genuinely huge common case — always
-    have working estimates, so the failure mode is a derived local
-    frame."""
-    try:
-        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        est = est if isinstance(est, int) else int(est.toString())
-        # Anything at/above the shared floor is the no-stats sentinel
-        # OR its propagated leak (operators above a LocalRelation
-        # "estimate" slightly-smaller huge numbers — r7 unification;
-        # the old exact-MaxValue test missed the leak and sent
-        # garbage-estimated local frames down the sketch path)
-        if est < _SENTINEL_FLOOR:  # real estimate
-            return est > threshold
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        for i in range(leaves.size()):
-            if leaves.apply(i).nodeName() not in _LOCAL_LEAF_NODES:
-                return True  # unstatted EXTERNAL source: assume huge
-        return False  # unstatted but fully local: assume small
-    except Exception:
-        return False
+def _sketch_by_default(df: DataFrame) -> bool:
+    """The exact-vs-sketch gate: True when `relational.plan_size`
+    reads ``df`` above ``APPROX_DRIFT_MIN_BYTES``, or cannot size it
+    because a leaf is an unstatted EXTERNAL source (a JDBC/DSv2
+    relation may be multi-TB and must never be value-buffered in one
+    aggregation state). A driver-local frame without stats, or a plan
+    whose size cannot be read, stays exact: file scans, the genuinely
+    huge common case, always have working estimates."""
+    size, unknown = plan_size(df)
+    return unknown == "external" if size is None else size > APPROX_DRIFT_MIN_BYTES
 
 
 def drift_bin_edges(
@@ -452,7 +419,7 @@ def numeric_drift(
     in either snapshot.
     """
     if approximate is None:
-        approximate = _estimated_size_exceeds(base, APPROX_DRIFT_MIN_BYTES)
+        approximate = _sketch_by_default(base)
     qs = [i / bins for i in range(1, bins)]
     edges_row = drift_bin_edges(base, col, bins, approximate).collect()[0]
     edges = [edges_row[f"e{i}"] for i in range(len(qs))]
@@ -597,7 +564,7 @@ def winsorize(
             f"need 0 <= lower_q < upper_q <= 1, got {lower_q}, {upper_q}"
         )
     if approximate is None:
-        approximate = _estimated_size_exceeds(df, APPROX_DRIFT_MIN_BYTES)
+        approximate = _sketch_by_default(df)
 
     # BOTH cut points of a column from ONE percentile expression
     # (array of percentages): the exact path buffers each column's
@@ -932,7 +899,7 @@ def quantile_bins(
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
     if approximate is None:
-        approximate = _estimated_size_exceeds(df, APPROX_DRIFT_MIN_BYTES)
+        approximate = _sketch_by_default(df)
     qs = F.array(*[F.lit(i / n_bins) for i in range(1, n_bins)])
     v = F.col(value_col)
     cut_agg = (

@@ -8,9 +8,13 @@ and a dim_person-scale dim or a 100x-grown input shuffles (SURVEY.md
 §4). `maybe_broadcast` is only for eagerly checkpointed frames, whose
 size neither can see; callers checkpoint a driver-built or exploded
 build side (robots rules, the fuzzy dim's key neighborhood) so that it
-can be sized. The argmax is a single window pass instead of the
-reference's two-aggregation + self-join formulation (`etl.py:181-204`),
-halving the shuffles. The join formulation is kept as `argmax_join`
+can be sized. This module holds the one size reader (`plan_size`,
+shared by the hints, the plan linter and the quality gates) and the
+one ceiling (`broadcast_ceiling`, the session's threshold).
+
+The argmax is a single window pass instead of the reference's
+two-aggregation + self-join formulation (`etl.py:181-204`), halving
+the shuffles. The join formulation is kept as `argmax_join`
 because its semantics differ (it preserves ties) and it serves as a
 test oracle.
 """
@@ -22,12 +26,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Ceiling for a forced broadcast hint, the same 64 MB the session sets
-# as spark.sql.autoBroadcastJoinThreshold: a hint skips the planner's
-# own size check, so `maybe_broadcast` and the plan linter apply this
-# one instead.
-DEFAULT_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-
 #: Estimates at/above this are sentinel-propagated garbage, not real
 #: sizes (Spark's "no stats" Long.MaxValue leaks through operators as
 #: slightly-smaller huge numbers). 1 EiB: no real broadcast side.
@@ -35,45 +33,66 @@ _SENTINEL_FLOOR = 1 << 60
 
 #: Logical leaves that are driver-local by construction; their unknown
 #: size means "a few in-memory rows", not an unstatted external table.
-#: The plan linter and the quality gate read this set. LogicalRDD is
-#: included because python createDataFrame frames arrive RDD-backed.
+#: LogicalRDD is included because python createDataFrame frames arrive
+#: RDD-backed.
 _LOCAL_LEAF_NODES = frozenset(
     {"LocalRelation", "OneRowRelation", "Range", "LogicalRDD"}
 )
 
 
-def materialized_size_bytes(plan, sc) -> int | None:
-    """The block-manager storage size of a logical ``plan`` that is one
-    held LogicalRDD leaf (a ``localCheckpoint``ed or persisted RDD), or
-    None for any other plan and for blocks that are not held.
+def broadcast_ceiling(spark) -> int:
+    """The session's spark.sql.autoBroadcastJoinThreshold in bytes,
+    read live. It is the one broadcast ceiling: `maybe_broadcast`, the
+    plan linter's ``oversized-broadcast-hint`` rule and
+    `similarity.contamination_screen` use the number the planner
+    applies to every other join. 0 or less means "never hint"."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
-    `localCheckpoint(eager=True)` replaces the plan with a LogicalRDD
-    but keeps the pre-checkpoint stats estimate: a probe frame whose
-    estimate rode through a crossJoin still reads as 35.9 GB after the
-    checkpoint although its blocks total 3,944 bytes. The block manager
-    has the real size.
+
+def plan_size(df: DataFrame, plan=None) -> tuple[int | None, str | None]:
+    """The size in bytes of ``plan`` (default: ``df``'s optimized
+    plan), or why it is unknown: ``(bytes, None)`` or ``(None, why)``.
+
+    A plan that is one held LogicalRDD leaf (a ``localCheckpoint``ed
+    or persisted RDD) is sized from the block manager: the checkpoint
+    keeps its pre-checkpoint estimate, so a probe frame whose estimate
+    rode through a crossJoin reads as 35.9 GB although its blocks
+    total 3,944 bytes. Any other plan is sized by the optimizer
+    estimate when it is below `_SENTINEL_FLOOR`. Otherwise ``why`` is
+    "local" when every leaf is in `_LOCAL_LEAF_NODES` (a few in-memory
+    rows with no stats), "external" when a leaf reads an unstatted
+    outside source, and "unreadable" when a reflection call failed.
+    Each caller decides what an unknown size means for it.
     """
     try:
+        if plan is None:
+            plan = df._jdf.queryExecution().optimizedPlan()
         leaves = plan.collectLeaves()
-        if leaves.size() != 1 or leaves.apply(0).nodeName() != "LogicalRDD":
-            return None
-        rdd_id = leaves.apply(0).rdd().id()
-        infos = sc._jsc.sc().getRDDStorageInfo()
-        for i in range(len(infos)):
-            if infos[i].id() == rdd_id:
-                return int(infos[i].memSize()) + int(infos[i].diskSize())
+        if leaves.size() == 1 and leaves.apply(0).nodeName() == "LogicalRDD":
+            rdd_id = leaves.apply(0).rdd().id()
+            infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+            for i in range(len(infos)):
+                if infos[i].id() == rdd_id:
+                    return int(infos[i].memSize()) + int(infos[i].diskSize()), None
+        est = plan.stats().sizeInBytes()
+        # py4j maps scala BigInt to int when it fits
+        est = est if isinstance(est, int) else int(est.toString())
+        if est < _SENTINEL_FLOOR:
+            return est, None
+        for i in range(leaves.size()):
+            if leaves.apply(i).nodeName() not in _LOCAL_LEAF_NODES:
+                return None, "external"
+        return None, "local"
     except Exception:
-        return None
-    return None
+        return None, "unreadable"
 
 
 def maybe_broadcast(
     df: DataFrame, max_bytes: int | None = None
 ) -> DataFrame:
     """Broadcast hint for an eagerly checkpointed frame: ``F.broadcast``
-    when ``df`` is at most ``max_bytes`` (default
-    `DEFAULT_BROADCAST_MAX_BYTES`, read at call time), else ``df``
-    unchanged.
+    when `plan_size` reads ``df`` at most ``max_bytes`` (default: the
+    session's `broadcast_ceiling`), else ``df`` unchanged.
 
     Everywhere else the planner's autoBroadcastJoinThreshold and AQE
     choose the join strategy from the sizes they see. A checkpoint
@@ -81,25 +100,15 @@ def maybe_broadcast(
     estimate, which through an explode or a self-join reads as GBs for
     a few KB of rows, so the build side would be picked from a wrong
     number; a frame built on the driver, or exploded, has no usable
-    estimate at all, so callers checkpoint it first. This helper reads
-    the block manager when ``df`` is one held checkpoint, and the
-    optimizer estimate otherwise; with no estimate (Spark's no-stats
-    sentinel, or a remote plan) ``df`` stays unhinted.
+    estimate at all, so callers checkpoint it first. An unknown size,
+    or a ceiling of 0 or less, leaves ``df`` unhinted.
     """
     if max_bytes is None:
-        max_bytes = DEFAULT_BROADCAST_MAX_BYTES
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        size = materialized_size_bytes(plan, df.sparkSession.sparkContext)
-        if size is None:
-            est = plan.stats().sizeInBytes()
-            # py4j maps scala BigInt to int when it fits
-            size = est if isinstance(est, int) else int(est.toString())
-    except Exception:
+        max_bytes = broadcast_ceiling(df.sparkSession)
+    size, _ = plan_size(df)
+    if size is None or max_bytes <= 0 or size > max_bytes:
         return df
-    if size >= _SENTINEL_FLOOR:
-        return df
-    return F.broadcast(df) if size <= max_bytes else df
+    return F.broadcast(df)
 
 
 def star_left_join(

@@ -1300,8 +1300,8 @@ def contamination_screen(
     ``method="auto"`` picks by the benchmark's matrix footprint:
 
     **matmul** (the default when the benchmark matrix fits the
-    broadcast budget — eval suites are 1e3-1e5 rows, so almost
-    always): the benchmark collapses to ONE normalized numpy matrix
+    session's broadcast ceiling, `relational.broadcast_ceiling` —
+    eval suites are 1e3-1e5 rows, so almost always): the benchmark collapses to ONE normalized numpy matrix
     shipped to every task; a single `mapInPandas` pass scores each
     Arrow batch of corpus vectors against ALL benchmark vectors with
     one BLAS matmul and emits each row's best match above the
@@ -1312,12 +1312,12 @@ def contamination_screen(
     x100 (Arrow-transferring ~31M candidate vector PAIRS into
     Python) vs one matrix product per batch here.
 
-    **lsh** (the fallback past the broadcast budget): the benchmark's
+    **lsh** (the fallback past the ceiling): the benchmark's
     multi-table hyperplane buckets (`hyperplane_lsh_buckets`, the
     splitmix64 plane family) explode and are broadcast by
-    `maybe_broadcast` when the optimizer's estimate times the
-    num_tables explode fan-out (which the estimate leaves out) fits
-    the budget; the corpus explodes its buckets in the scan stage,
+    `maybe_broadcast` when their size times the num_tables explode
+    fan-out (which the estimate leaves out) fits the ceiling; the
+    corpus explodes its buckets in the scan stage,
     broadcast-joins on (table, bucket), verifies exact cosine with a
     vectorized Arrow kernel, and one partial-aggregatable min-struct
     groupBy keeps the best match (the only shuffle, match-sized).
@@ -1368,7 +1368,7 @@ def contamination_screen(
     side never flag and never cost.
     """
     from udacity_data_engineering_capstone_project_spark.operators.relational import (
-        DEFAULT_BROADCAST_MAX_BYTES,
+        broadcast_ceiling,
         maybe_broadcast,
     )
 
@@ -1380,6 +1380,7 @@ def contamination_screen(
             f"bench_id_col={bench_id_col!r}, plus the reserved 'cos_sim' — "
             "alias one side before screening"
         )
+    ceiling = broadcast_ceiling(benchmark.sparkSession)
     n_bench = None
     if method == "auto":
         # one benchmark-sized agg prices the matrix: row count x the
@@ -1392,11 +1393,7 @@ def contamination_screen(
             F.count(F.lit(1)), F.max(F.size(F.col(vec_col)))
         ).first()
         width = width if width and width > 0 else dim
-        method = (
-            "matmul"
-            if n_bench * width * 8 * 2 <= DEFAULT_BROADCAST_MAX_BYTES
-            else "lsh"
-        )
+        method = "matmul" if n_bench * width * 8 * 2 <= ceiling else "lsh"
     if method == "matmul":
         return _contamination_matmul(
             corpus, benchmark, id_col, vec_col, bench_id_col, threshold
@@ -1476,10 +1473,8 @@ def contamination_screen(
     # planner broadcasts the corpus vectors instead. Spark does not
     # scale a Generate's estimate by its fan-out, and each benchmark
     # row explodes into num_tables bucket rows that each carry the
-    # full vector, so the budget is divided by num_tables.
-    bench = maybe_broadcast(
-        bench, max_bytes=DEFAULT_BROADCAST_MAX_BYTES // max(num_tables, 1)
-    )
+    # full vector, so the ceiling is divided by num_tables.
+    bench = maybe_broadcast(bench, max_bytes=ceiling // max(num_tables, 1))
     corp = hyperplane_lsh_buckets(
         _with_norm(
             corpus.select(F.col(id_col).alias("__cid"), F.col(vec_col)).filter(
@@ -1753,94 +1748,51 @@ def pq_encode(
     codebooks: DataFrame,
     vec_col: str,
     out_col: str = "pq_codes",
-    method: str = "pandas",
 ) -> DataFrame:
     """Encode each vector as its array of nearest-subspace-centroid ids
-    (``m`` ints in [0, k)) — the PQ code. SHUFFLE-FREE either way: one
-    map-only pass that preserves every other column.
+    (``m`` ints in [0, k)) — the PQ code. SHUFFLE-FREE: one map-only
+    pass that preserves every other column.
 
-    ``method="pandas"`` (default): one Arrow-batched numpy kernel —
-    the m*k*subdim distance tensor per batch in C loops. The SQL
-    higher-order-function form evaluates an interpreted lambda per
-    element (m*k*subdim ops PER ROW — same pathology the hyperplane-LSH
-    plane dots hit, `hyperplane_lsh_buckets`), so numpy is the
-    100 TB path. The kernel accumulates over subdim sequentially in
-    float64 — bit-identical to the expression fold — then quantizes as
-    ``floor(dist * 1e9)`` before argmin exactly as the expr path does
-    (one shared IEEE multiply + floor, no decimal-rounding-mode
-    divergence: np.round is half-to-even while F.round is half-up, so
-    a 9 dp rule would NOT be bit-identical at half-ulp boundaries).
-    Training calls this same kernel, so codes always reproduce the
-    final training assignment (pinned by test).
-
-    ``method="expr"``: pure-JVM argmin expressions over codebook array
-    literals — zero Python anywhere, the oracle-friendly twin.
-
-    Ties take the lowest cell on both paths (numpy argmin and
-    `array_position` both return the first match).
+    One Arrow-batched numpy kernel: the m*k*subdim distance tensor per
+    batch in C loops. The SQL higher-order-function form evaluates an
+    interpreted lambda per element (m*k*subdim ops PER ROW — same
+    pathology the hyperplane-LSH plane dots hit,
+    `hyperplane_lsh_buckets`), so numpy is the 100 TB path. The kernel
+    accumulates over subdim sequentially in float64, then quantizes as
+    ``floor(dist * 1e9)`` before the argmin (one IEEE multiply + floor,
+    no decimal rounding mode: np.round is half-to-even while F.round
+    is half-up). Ties take the lowest cell (numpy argmin returns the
+    first match). Training calls this same kernel, so codes always
+    reproduce the final training assignment (pinned by test). NULL
+    vectors encode to NULL.
     """
+    from pyspark.sql.functions import pandas_udf
+
     m, k, table = _collect_codebooks(codebooks)
     sd = len(table[0][0])
-    if method == "pandas":
-        from pyspark.sql.functions import pandas_udf
+    cb = np.asarray(table, dtype=np.float64)  # (m, k, sd)
 
-        cb = np.asarray(table, dtype=np.float64)  # (m, k, sd)
+    @pandas_udf("array<int>")
+    def _codes(vecs: pd.Series) -> pd.Series:
+        ok = vecs.notna()
+        if not ok.any():
+            return pd.Series([None] * len(vecs))
+        mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs[ok]])
+        x = mat.reshape(len(mat), m, sd)
+        acc = np.zeros((len(mat), m, k), dtype=np.float64)
+        for t in range(sd):
+            d = x[:, :, None, t] - cb[None, :, :, t]
+            acc += d * d
+        codes = np.floor(acc * 1e9).argmin(axis=2).astype(np.int32)
+        res: list = [None] * len(vecs)
+        j = 0
+        for i, flag in enumerate(ok.to_numpy()):
+            if flag:
+                res[i] = codes[j]
+                j += 1
+        return pd.Series(res)
 
-        @pandas_udf("array<int>")
-        def _codes(vecs: pd.Series) -> pd.Series:
-            ok = vecs.notna()
-            if not ok.any():
-                return pd.Series([None] * len(vecs))
-            mat = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
-            )
-            x = mat.reshape(len(mat), m, sd)
-            acc = np.zeros((len(mat), m, k), dtype=np.float64)
-            # sequential accumulation over subdim = the JVM fold order,
-            # so distances are bit-identical to the "expr" method
-            for t in range(sd):
-                d = x[:, :, None, t] - cb[None, :, :, t]
-                acc += d * d
-            codes = np.floor(acc * 1e9).argmin(axis=2).astype(np.int32)
-            res: list = [None] * len(vecs)
-            j = 0
-            for i, flag in enumerate(ok.to_numpy()):
-                if flag:
-                    res[i] = codes[j]
-                    j += 1
-            return pd.Series(res)
-
-        return df.withColumn(out_col, _codes(F.col(vec_col)))
-    if method != "expr":
-        raise ValueError(f"method must be 'pandas' or 'expr', got {method!r}")
-    v = F.col(vec_col).cast("array<double>")
-
-    def _code(j: int) -> Column:
-        sub = F.slice(v, j * sd + 1, sd)
-        # floor(dist * 1e9): the SAME quantization the pandas kernel
-        # applies — one IEEE multiply + floor on the identically-folded
-        # float64 sum, so the two paths are bit-identical (F.round's
-        # half-up vs np.round's half-to-even would diverge on exact
-        # half-ulp decimal boundaries)
-        dists = F.transform(
-            _lit_matrix(table[j]),
-            lambda c: F.floor(
-                F.aggregate(
-                    F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                )
-                * F.lit(1e9)
-            ),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    # NULL vectors encode to NULL (matching the pandas path), never to
-    # an array of null elements
-    return df.withColumn(
-        out_col,
-        F.when(v.isNotNull(), F.array(*[_code(j) for j in range(m)])),
-    )
+    return df.withColumn(out_col, _codes(F.col(vec_col)))
 
 
 def pq_topk(

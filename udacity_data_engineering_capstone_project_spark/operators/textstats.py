@@ -28,58 +28,6 @@ def _stop_pattern(stopwords: Sequence[str]) -> str:
     return r"\b(" + "|".join(stopwords) + r")\b"
 
 
-def text_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    stopwords: Sequence[str] = DEFAULT_STOPWORDS,
-) -> DataFrame:
-    """Per-document stats + a composite quality score.
-
-    Columns: n_chars_calc, n_words, n_stop, stop_ratio (r6),
-    quality_score (r6) = (1 - stop_ratio) * min(n_words/100, 1).
-    """
-    t = F.col(text_col)
-    n_words = F.regexp_count(t, F.lit(r"[A-Za-z]+")).cast("long")
-    n_stop = F.regexp_count(F.lower(t), F.lit(_stop_pattern(stopwords))).cast("long")
-    stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
-    quality = (F.lit(1.0) - stop_ratio) * F.least(n_words / F.lit(100.0), F.lit(1.0))
-    return df.select(
-        F.col(id_col),
-        F.length(t).cast("long").alias("n_chars_calc"),
-        n_words.alias("n_words"),
-        n_stop.alias("n_stop"),
-        F.round(stop_ratio, 6).alias("stop_ratio"),
-        F.round(quality, 6).alias("quality_score"),
-    )
-
-
-def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Whitespace token count + BPE-ish token count per document."""
-    t = F.col(text_col)
-    n_ws = F.size(F.split(F.trim(t), r"\s+")).cast("long")
-    n_bpe = F.regexp_count(t, F.lit(BPE_ISH_PATTERN)).cast("long")
-    return df.select(
-        F.col(id_col), n_ws.alias("n_ws_tokens"), n_bpe.alias("n_bpe_tokens")
-    )
-
-
-def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Heuristic script-based language ID: CJK -> zh, Cyrillic -> ru,
-    Arabic -> ar, Devanagari -> hi, else en. A real system would use
-    character-n-gram models; the operator shape (pure expression CASE
-    over unicode-class probes) is the point — it scales linearly."""
-    t = F.col(text_col)
-    pred = (
-        F.when(t.rlike("[一-鿿]"), F.lit("zh"))
-        .when(t.rlike("[Ѐ-ӿ]"), F.lit("ru"))
-        .when(t.rlike("[؀-ۿ]"), F.lit("ar"))
-        .when(t.rlike("[ऀ-ॿ]"), F.lit("hi"))
-        .otherwise(F.lit("en"))
-    )
-    return df.select(F.col(id_col), pred.alias("lang_pred"))
-
-
 def text_profile(
     df: DataFrame,
     id_col: str,
@@ -91,8 +39,15 @@ def text_profile(
     """Every per-document text metric in ONE projection: quality stats
     (chars/words/stopwords/ratio/score), token counts (whitespace +
     BPE-ish) and script-heuristic language ID. One codegen stage, no
-    join — the shape that survives a 100 TB corpus (the individual
-    operators above stay available for narrow pipelines)."""
+    join — the shape that survives a 100 TB corpus. The narrow
+    operators below are projections of this one (Catalyst prunes the
+    metrics they drop), so each metric has one definition.
+
+    quality_score (r6) = (1 - stop_ratio) * min(n_words/100, 1).
+    Language ID is a script heuristic: CJK -> zh, Cyrillic -> ru,
+    Arabic -> ar, Devanagari -> hi, else en (a real system would use
+    character-n-gram models; the pure-expression CASE over
+    unicode-class probes is the shape that scales linearly)."""
     t = F.col(text_col)
     n_words = F.regexp_count(t, F.lit(r"[A-Za-z]+")).cast("long")
     n_stop = F.regexp_count(F.lower(t), F.lit(_stop_pattern(stopwords))).cast("long")
@@ -117,11 +72,36 @@ def text_profile(
         F.regexp_count(t, F.lit(BPE_ISH_PATTERN)).cast("long").alias("n_bpe_tokens"),
         lang_pred.alias("lang_pred"),
         *(
-            [F.md5(normalize_text(t)).alias("fingerprint")]
+            [fingerprint(t).alias("fingerprint")]
             if include_fingerprint
             else []
         ),
     )
+
+
+def text_stats(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    stopwords: Sequence[str] = DEFAULT_STOPWORDS,
+) -> DataFrame:
+    """Per-document stats + a composite quality score: n_chars_calc,
+    n_words, n_stop, stop_ratio (r6), quality_score (r6)."""
+    return text_profile(df, id_col, text_col, stopwords=stopwords).select(
+        id_col, "n_chars_calc", "n_words", "n_stop", "stop_ratio", "quality_score"
+    )
+
+
+def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Whitespace token count + BPE-ish token count per document."""
+    return text_profile(df, id_col, text_col).select(
+        id_col, "n_ws_tokens", "n_bpe_tokens"
+    )
+
+
+def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Script-heuristic language ID per document (see `text_profile`)."""
+    return text_profile(df, id_col, text_col).select(id_col, "lang_pred")
 
 
 def fingerprint(col: Column | str) -> Column:

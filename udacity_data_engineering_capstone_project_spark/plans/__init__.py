@@ -7,15 +7,11 @@ from udacity_data_engineering_capstone_project_spark.plans.pipeline import (
     orphaned_checkpoint_trees,
     run_pipeline,
 )
-from udacity_data_engineering_capstone_project_spark.plans.star import (
-    build_dimension,
-    build_fact,
-)
+from udacity_data_engineering_capstone_project_spark.plans.star import build_dimension
 
 __all__ = [
     "assert_scalable",
     "build_dimension",
-    "build_fact",
     "lint_plan",
     "plan_summary",
     "orphaned_checkpoint_trees",

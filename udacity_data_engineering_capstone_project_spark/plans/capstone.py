@@ -42,8 +42,11 @@ from udacity_data_engineering_capstone_project_spark.operators.quality import (
     expect_distinct_count,
     expect_row_count,
 )
-from udacity_data_engineering_capstone_project_spark.operators.relational import top_per_group
-from udacity_data_engineering_capstone_project_spark.plans.star import build_dimension, build_fact
+from udacity_data_engineering_capstone_project_spark.operators.relational import (
+    star_left_join,
+    top_per_group,
+)
+from udacity_data_engineering_capstone_project_spark.plans.star import build_dimension
 
 #: Valid US states (reference `etl.py:21-25`).
 VALID_US_STATES = [
@@ -249,7 +252,7 @@ def build_star_schema(
         "id_temp",
     )
 
-    fact_imm = build_fact(
+    fact_imm = star_left_join(
         immigration,
         dims=[
             (j_time, immigration["arrdate_dt"] == j_time["date"]),
@@ -263,7 +266,7 @@ def build_star_schema(
             ]),
             (j_person, immigration["id_imm"] == F.col("__k_id_imm")),
         ],
-        keep=[
+        select=[
             immigration["id_imm"], "id_state", "id_time", "id_person",
             "id_port", "id_airline", "id_temp",
         ],

@@ -41,15 +41,16 @@ function instead of a review habit, so a pipeline can gate CI on
   design — contamination_check and dedup_ngram_jaccard, the n-gram
   overlap tiers whose small side is broadcast/distinct-bounded.
 - ``oversized-broadcast-hint``: a join carrying an explicit broadcast
-  hint whose hinted side the optimizer estimates ABOVE the broadcast
-  ceiling (or cannot size and the side reads an external source). A
-  bare ``F.broadcast`` skips every stats check, so a side that is
-  broadcast-sized at test SF becomes a multi-GB forced broadcast into
-  every executor at 100x; leave the choice to the planner's
-  threshold and AQE instead. A materialized side is sized from the
-  block manager, the way ``maybe_broadcast``
-  (``operators/relational.py``) sizes the checkpointed frames it
-  hints.
+  hint whose hinted side is larger than the session's broadcast
+  ceiling (``spark.sql.autoBroadcastJoinThreshold``, read live; 0 or
+  less means no hint fits), or cannot be sized and reads an external
+  source, or cannot be sized at all. A bare ``F.broadcast`` skips
+  every stats check, so a side that is broadcast-sized at test SF
+  becomes a multi-GB forced broadcast into every executor at 100x;
+  leave the choice to the planner's threshold and AQE instead. The
+  side is sized by ``relational.plan_size``, the reader
+  ``maybe_broadcast`` uses: the block manager for a materialized
+  side, else the optimizer estimate.
 
 The linter reads the ANALYZED logical plan (rules about intent) plus
 the executed plan string (rules about physical strategy) — both
@@ -76,70 +77,17 @@ import re
 
 from pyspark.sql import DataFrame
 
+# One size reader and one broadcast ceiling, shared with the hints
+# themselves (`maybe_broadcast`), so the linter and the gate cannot
+# drift apart.
+from udacity_data_engineering_capstone_project_spark.operators.relational import (
+    broadcast_ceiling,
+    plan_size,
+)
+
 #: Above this optimizer estimate a partition-less window stops being
 #: the small-dimension surrogate-key idiom and becomes a one-task wall.
 GLOBAL_WINDOW_MAX_BYTES = 64 * 1024 * 1024
-
-# Sentinel floor, local-leaf classification, broadcast ceiling and the
-# block-manager size read are SHARED with operators.relational (one
-# definition each, so linter and gate cannot drift apart).
-from udacity_data_engineering_capstone_project_spark.operators import relational as _relational  # noqa: E402
-from udacity_data_engineering_capstone_project_spark.operators.relational import (  # noqa: E402
-    _LOCAL_LEAF_NODES as _SHARED_LOCAL_LEAVES,
-    _SENTINEL_FLOOR,
-)
-
-#: Ceiling for an explicitly hinted broadcast side. None (the default)
-#: means "whatever the runtime gate uses RIGHT NOW" — resolved through
-#: `_hint_max_bytes()` at lint time, so a deployment that retunes
-#: `relational.DEFAULT_BROADCAST_MAX_BYTES` after import (the
-#: documented path; r9 review finding — an import-time snapshot
-#: silently diverged linter from gate) moves both together. Stays
-#: module-level-assignable so a plan test can pin the linter alone.
-BROADCAST_HINT_MAX_BYTES: int | None = None
-
-
-def _hint_max_bytes() -> int:
-    """The broadcast ceiling in force for this lint call: the explicit
-    module override when a test set one, else the runtime gate's
-    constant read at CALL time (never an import-time snapshot)."""
-    if BROADCAST_HINT_MAX_BYTES is not None:
-        return BROADCAST_HINT_MAX_BYTES
-    return _relational.DEFAULT_BROADCAST_MAX_BYTES
-
-
-def _leaf_resolved_size(plan) -> tuple[int, bool]:
-    """(estimated size, is_external) for a logical subtree: estimates
-    above `_SENTINEL_FLOOR` are resolved by the subtree's leaves —
-    all-local leaves mean a small in-memory frame (the sentinel lies),
-    any external leaf means the size is genuinely unknowable.
-
-    FAIL-CLOSED: a stats()/collectLeaves() failure reads as
-    (sentinel, external) — an unsizeable hinted side gets FLAGGED,
-    never silently skipped (review finding: the first cut classified
-    exceptions as 'local sentinel', passing exactly the
-    forced-broadcast-over-unsizeable-source case the rule exists
-    for). Spurious errors from exotic plans go through
-    ``assert_scalable(..., allow=...)``.
-    """
-    sentinel = (1 << 63) - 1
-    try:
-        est = plan.stats().sizeInBytes()
-        est = est if isinstance(est, int) else int(est.toString())
-    except Exception:
-        return sentinel, True
-    external = False
-    if est >= _SENTINEL_FLOOR:
-        try:
-            leaves = plan.collectLeaves()
-            for i in range(leaves.size()):
-                if leaves.apply(i).nodeName() not in _SHARED_LOCAL_LEAVES:
-                    external = True
-                    break
-        except Exception:
-            external = True
-    return est, external
-
 
 #: Strips Catalyst expression ids (`buckets#123` -> `buckets`) so one
 #: generator expression compares equal across the two sides of a join.
@@ -231,12 +179,9 @@ def lint_plan(df: DataFrame) -> list[dict]:
         name = _simple_name(node)
         if name == "Window":
             if node.partitionSpec().isEmpty():
-                try:
-                    est = node.child().stats().sizeInBytes()
-                    est = est if isinstance(est, int) else int(est.toString())
-                except Exception:
-                    est = (1 << 63) - 1
-                small = est <= GLOBAL_WINDOW_MAX_BYTES
+                est, _ = plan_size(df, node.child())
+                small = est is not None and est <= GLOBAL_WINDOW_MAX_BYTES
+                shown = f"{est} B" if est is not None else "no size"
                 # The contiguous-surrogate-key idiom: a partition-less
                 # window directly over a CARDINALITY-REDUCING child
                 # (aggregate/distinct output — a dimension). Catalyst's
@@ -268,7 +213,7 @@ def lint_plan(df: DataFrame) -> list[dict]:
                                 "the input is an aggregation output (the "
                                 "surrogate-key idiom — runtime rows are "
                                 "the dim, whatever the un-reduced "
-                                f"estimate of {est} B says); CONFIRM the "
+                                f"estimate of {shown} says); CONFIRM the "
                                 "grouping key is dimension-cardinality — "
                                 "a near-unique key (content fingerprints) "
                                 "still one-tasks, and cardinality is not "
@@ -276,7 +221,7 @@ def lint_plan(df: DataFrame) -> list[dict]:
                                 if reduced and not small
                                 else "tolerable while the input stays "
                                 "dimension-sized (estimated "
-                                f"{est} B), but a latent wall"
+                                f"{shown}), but a latent wall"
                                 if small
                                 else "partition on a key or decompose "
                                 "(see cap_tokens_per_group's prefix sum)"
@@ -366,6 +311,7 @@ def lint_plan(df: DataFrame) -> list[dict]:
     # folds ResolvedHint nodes into each Join's JoinHint, and its
     # stats are the post-pruning estimates the planner itself uses
     # (analyzed-plan stats would over-report un-pruned subtrees).
+    ceiling = broadcast_ceiling(df.sparkSession)
     for node, _parent in _walk(qe.optimizedPlan()):
         if _simple_name(node) != "Join":
             continue
@@ -386,40 +332,33 @@ def lint_plan(df: DataFrame) -> list[dict]:
                     continue
             except Exception:
                 continue
-            hint_max = _hint_max_bytes()
-            est, external = _leaf_resolved_size(child)
-            sentinel = est >= _SENTINEL_FLOOR
-            if sentinel and not external:
-                continue  # local in-memory frame: the sentinel lies
-            if est > hint_max and not sentinel:
-                # an inherited-garbage estimate on a materialized
-                # frame: prefer the block manager's truth
-                actual = _relational.materialized_size_bytes(
-                    child, df.sparkSession.sparkContext
-                )
-                if actual is not None and actual <= hint_max:
-                    continue
-            if est > hint_max:
-                findings.append(
-                    {
-                        "rule": "oversized-broadcast-hint",
-                        "severity": "error",
-                        "detail": (
-                            f"{side} side of a join carries an explicit "
-                            "broadcast hint but "
-                            + (
-                                "reads an external source with no size "
-                                "estimate"
-                                if sentinel
-                                else f"is estimated at {est} B "
-                                f"(> {hint_max} B)"
-                            )
-                            + "; a forced broadcast skips every stats "
-                            "check — drop the hint and let the planner and AQE "
-                            "choose"
-                        ),
-                    }
-                )
+            size, unknown = plan_size(df, child)
+            if unknown == "local":
+                continue  # driver-local model frame: the sentinel lies
+            if size is not None and ceiling > 0 and size <= ceiling:
+                continue
+            findings.append(
+                {
+                    "rule": "oversized-broadcast-hint",
+                    "severity": "error",
+                    "detail": (
+                        f"{side} side of a join carries an explicit "
+                        "broadcast hint but "
+                        + (
+                            "reads an external source with no size "
+                            "estimate"
+                            if unknown == "external"
+                            else "cannot be sized"
+                            if size is None
+                            else f"is sized at {size} B (session "
+                            f"broadcast ceiling {ceiling} B)"
+                        )
+                        + "; a forced broadcast skips every stats "
+                        "check — drop the hint and let the planner and AQE "
+                        "choose"
+                    ),
+                }
+            )
 
     plan_str = qe.executedPlan().toString()
     final = plan_str.split("== Initial Plan ==")[0]

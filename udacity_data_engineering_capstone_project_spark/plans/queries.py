@@ -27,224 +27,33 @@ from pyspark.sql import DataFrame, SparkSession
 from udacity_data_engineering_capstone_project_spark.plans._qcore import (
     REGISTRY,
     UNREGISTERED,
-    QuerySpec,
-    _register,
-    _t,
 )
 
 # Tier modules register their specs at import time; IMPORT ORDER IS
 # REGISTRATION ORDER (the driver grades the first 50 registered, and
-# the _FRONT reorder below only moves the flagship block). Every
-# module-level symbol is re-exported here so external imports are
-# unchanged by the r10 split (VERDICT r9 #2).
-from udacity_data_engineering_capstone_project_spark.plans.queries_relational import (
-    pricing_summary,
-    filter_project,
-    normalize_segment,
-    sas_date_decode,
-    date_parts_agg,
-    dim_with_keys,
-    top1_per_group,
-    argmax_ties,
-    star_schema_fact,
-    avg_of_avgs_q,
-    analyst_top_segments,
-    shipping_priority,
-    local_supplier_volume,
-    bucket_join,
-    pivot_unpivot,
-    events_json_arrays,
-    window_funcs,
-    fuzzy_name_pairs,
-    scalar_function_sink,
-    data_quality_profile,
-    multi_file_distinct,
-    grouping_sets_sales,
-    set_and_semi_joins,
-    TOP1_PER_GROUP_ORACLE,
+# the _FRONT reorder below only moves the flagship block). Import any
+# other name from the tier module that defines it; this module keeps
+# only the names the driver (`pricing_summary`) and bench.py's
+# bench-only rows read through it.
+from udacity_data_engineering_capstone_project_spark.plans import (  # noqa: F401
+    queries_relational,
+    queries_events,
+    queries_dedup,
+    queries_text,
+    queries_corpus,
+    queries_ml,
+    queries_signals,
+    queries_quality,
+    queries_crawl,
 )
-from udacity_data_engineering_capstone_project_spark.plans.queries_events import (
-    sessionize,
-    streaming_hourly,
-    streaming_sessionize,
-    streaming_user_stats,
-    decay_scores,
-    asof_last_click,
-    approx_distinct,
-    STREAMING_HOURLY_ORACLE,
-    _DECAY_LAM,
-    DECAY_ORACLE,
-)
-from udacity_data_engineering_capstone_project_spark.plans.queries_dedup import (
-    dedup_exact,
-    segment_dedup,
-    dedup_ngram_jaccard,
-    dedup_minhash_lsh,
+from udacity_data_engineering_capstone_project_spark.plans.queries_dedup import (  # noqa: F401
     minhash_screen_bench,
-    _simhash_oracle,
-    dedup_simhash,
-    _dedup_clusters_oracle,
-    dedup_clusters,
-    dedup_embedding,
-    fuzzy_join,
-    fuzzy_join_ref_q,
-    fuzzy_join_ref_left_q,
-    leakage_split_q,
-    FUZZY_JOIN_ORACLE,
-    FUZZY_JOIN_REF_ORACLE,
-    FUZZY_JOIN_REF_LEFT_ORACLE,
-    LEAKAGE_SPLIT_ORACLE,
 )
-from udacity_data_engineering_capstone_project_spark.plans.queries_text import (
-    _bpe_oracle_sql,
-    bpe_train_q,
-    bpe_tokenize_q,
-    _pii_oracle_sql,
-    pii_redact_q,
-    _link_graph_oracle,
-    link_graph_q,
-    k_anonymity_q,
-    chunk_q,
-    temperature_mix_q,
-    calibration_q,
-    _label_prop_oracle,
-    label_prop_q,
-    pack_sequences_q,
-    _BPE_NUM_MERGES,
-    _BPE_MAX_TOKEN_LEN,
-    _PII_SUFFIX_SQL,
-    _LINK_HTML_SQL,
-    _LINK_SRC_HOST_SQL,
-    _K_ANON_ORACLE,
-    _CHUNK_TOKENS,
-    _CHUNK_STRIDE,
-    _CHUNK_ORACLE,
-    _TEMP_MIX_TIER_SQL,
-    _TEMP_MIX_ORACLE,
-    _CALIB_ORACLE,
-    _LABEL_PROP_ROUNDS,
-    _PACK_BUDGET,
-    _PACK_BUCKETS,
-    _PACK_ORACLE,
+from udacity_data_engineering_capstone_project_spark.plans.queries_relational import (  # noqa: F401
+    pricing_summary,
 )
-from udacity_data_engineering_capstone_project_spark.plans.queries_corpus import (
-    ann_topk,
-    ann_ivf,
-    _embedding_lsh_oracle,
-    dedup_embedding_lsh,
-    _contamination_oracle,
-    CONTAMINATION_ORACLE,
-    contamination_embedding_q,
-    contamination_embedding_lsh_q,
-    contamination_embedding_auto_q,
-    sql_entrypoint,
-    streaming_dedup,
-    text_profile_q,
-    corpus_prep,
-    multimodal_meta,
-    repetition_signals_q,
-    contamination_check,
-    corpus_sample,
-    tfidf_topk,
-    bm25_retrieval,
-    audio_features_q,
-)
-from udacity_data_engineering_capstone_project_spark.plans.queries_ml import (
-    scd2_history,
-    _pagerank_oracle,
-    pagerank_q,
-    shards_q,
-    _mmr_oracle,
-    mmr_q,
-    salted_join_q,
-    asof_next_q,
-    _ppr_oracle,
-    ppr_q,
-    hashed_classifier,
-    ngram_lm,
-    weighted_sample,
-    _SHARDS_N,
-    _SHARDS_ORACLE,
-    _MMR_K,
-    _MMR_LAM,
-    _MMR_POOL,
-    _SALTED_JOIN_ORACLE,
-    _PPR_SEEDS,
-    _PPR_ROUNDS,
-    HASHED_CLASSIFIER_ORACLE,
-    NGRAM_LM_ORACLE,
-    WEIGHTED_SAMPLE_ORACLE,
-)
-from udacity_data_engineering_capstone_project_spark.plans.queries_signals import (
-    merge_upsert_q,
-    range_join_q,
-    resample_q,
-    category_drift_q,
-    numeric_drift_q,
-    dup_spans_q,
-    token_budget_q,
-    corpus_diff_q,
-    winsorize_q,
-    language_id_q,
-    clustering_coeff_q,
-    quantile_sketch_q,
-    triangle_count_q,
-    url_canon_q,
-    heavy_hitters_q,
+from udacity_data_engineering_capstone_project_spark.plans.queries_signals import (  # noqa: F401
     heavy_hitters_bench,
-    MERGE_UPSERT_ORACLE,
-    RANGE_JOIN_ORACLE,
-    RESAMPLE_ORACLE,
-    CATEGORY_DRIFT_ORACLE,
-    NUMERIC_DRIFT_ORACLE,
-    DUP_SPANS_ORACLE,
-    TOKEN_BUDGET_ORACLE,
-    CORPUS_DIFF_ORACLE,
-    WINSORIZE_ORACLE,
-    LANGUAGE_ID_ORACLE,
-    CLUSTERING_COEFF_ORACLE,
-    QUANTILE_SKETCH_ORACLE,
-    TRIANGLE_ORACLE,
-    _RAW_URL_SQL,
-    URL_CANON_ORACLE,
-    HEAVY_HITTERS_ORACLE,
-)
-from udacity_data_engineering_capstone_project_spark.plans.queries_quality import (
-    gopher_quality_q,
-    pq_ann_q,
-    capstone_counts,
-    ingest_anomaly_q,
-    skew_report_q,
-    quality_bins_q,
-    pr_curve_q,
-    embedding_drift_q,
-    GOPHER_QUALITY_ORACLE,
-    CAPSTONE_COUNTS_ORACLE,
-    INGEST_ANOMALY_ORACLE,
-    SKEW_REPORT_ORACLE,
-    QUALITY_BINS_ORACLE,
-    PR_CURVE_ORACLE,
-    EMBEDDING_DRIFT_ORACLE,
-)
-from udacity_data_engineering_capstone_project_spark.plans.queries_crawl import (
-    filter_cascade_q,
-    robots_filter_q,
-    strip_html_q,
-    blocklist_screen_q,
-    crawl_pipeline_intake,
-    crawl_cascade_rules,
-    crawl_pipeline_stage_fns,
-    crawl_pipeline_stages,
-    crawl_pipeline_q,
-    CASCADE_ORACLE,
-    _ROBOTS_URL_SQL,
-    ROBOTS_FILTER_ORACLE,
-    _ROBOTS_TXT,
-    _HTML_WRAP_SQL,
-    STRIP_HTML_ORACLE,
-    BLOCKLIST_ORACLE,
-    CRAWL_PIPELINE_ORACLE,
-    CRAWL_BLOCKLIST_PHRASES,
 )
 
 # ------------------------------------------------------------------

@@ -3,10 +3,10 @@
 Split from plans/queries.py in r10 (VERDICT r9 #2): this module
 registers its (spark_fn, oracle_sql) pairs into the shared
 REGISTRY/UNREGISTERED stores (plans/_qcore.py) at import time;
-plans/queries.py is the facade that imports the tiers in grading
-order and re-exports every symbol — the driver contract and all
-external imports are unchanged. Registry-wide contract notes
-(aliasing, rounding, tie-breaking) live in plans/queries.py.
+plans/queries.py imports the tiers in grading order. Import a name
+from this module, not through plans/queries.py. Registry-wide
+contract notes (aliasing, rounding, tie-breaking) live in
+plans/queries.py.
 """
 
 from __future__ import annotations

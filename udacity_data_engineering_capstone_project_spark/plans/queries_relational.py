@@ -3,10 +3,10 @@
 Split from plans/queries.py in r10 (VERDICT r9 #2): this module
 registers its (spark_fn, oracle_sql) pairs into the shared
 REGISTRY/UNREGISTERED stores (plans/_qcore.py) at import time;
-plans/queries.py is the facade that imports the tiers in grading
-order and re-exports every symbol — the driver contract and all
-external imports are unchanged. Registry-wide contract notes
-(aliasing, rounding, tie-breaking) live in plans/queries.py.
+plans/queries.py imports the tiers in grading order. Import a name
+from this module, not through plans/queries.py. Registry-wide
+contract notes (aliasing, rounding, tie-breaking) live in
+plans/queries.py.
 """
 
 from __future__ import annotations
@@ -18,9 +18,10 @@ from udacity_data_engineering_capstone_project_spark.operators.cleaning import n
 from udacity_data_engineering_capstone_project_spark.operators.relational import (
     argmax_join,
     avg_of_avgs,
+    star_left_join,
     top_per_group,
 )
-from udacity_data_engineering_capstone_project_spark.plans.star import build_dimension, build_fact
+from udacity_data_engineering_capstone_project_spark.plans.star import build_dimension
 
 from udacity_data_engineering_capstone_project_spark.plans._qcore import _register, _t
 
@@ -252,7 +253,7 @@ def argmax_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN dim_priority p ON b.o_orderpriority = p.o_orderpriority
     """,
     "Full star-schema build: dims w/ deterministic keys + row-preserving "
-    "left dim joins (J3-J8, etl.py:221-293 via plans.star)." 
+    "left dim joins (J3-J8, etl.py:221-293 via relational.star_left_join)." 
     "Ceded its driver slot in round 13 after holding a fresh green row; "
     "hash-pinned in the unregistered parity gate.",
     registered=False,
@@ -266,14 +267,14 @@ def star_schema_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim_segment = build_dimension(base, ["c_mktsegment"], "id_segment")
     dim_date = build_dimension(base, ["o_orderdate"], "id_date")
     dim_priority = build_dimension(base, ["o_orderpriority"], "id_priority")
-    return build_fact(
+    return star_left_join(
         base,
         dims=[
             (dim_segment, "c_mktsegment"),
             (dim_date, "o_orderdate"),
             (dim_priority, "o_orderpriority"),
         ],
-        keep=["o_orderkey", "id_segment", "id_date", "id_priority", "o_totalprice"],
+        select=["o_orderkey", "id_segment", "id_date", "id_priority", "o_totalprice"],
     )
 
 

@@ -1,12 +1,13 @@
 """Star-schema builder (reference: `etl.py:221-293`, SURVEY.md §7.5).
 
-Generic dimension extraction + fact assembly. The reference hand-writes
-five `create_dim_*` functions and one six-join fact build; here those
-are two parameterized operators.
+Generic dimension extraction. The reference hand-writes five
+`create_dim_*` functions; here they are one parameterized operator.
+The reference's six-join fact build is
+`operators.relational.star_left_join`.
 
 Scale posture: dimensions are distinct-projections (one shuffle each,
-tiny outputs) and are broadcast into the fact build, so the fact table
-— the 100 TB side — is never shuffled during assembly.
+tiny outputs); the planner and AQE broadcast them into the fact build
+while they stay under the session's broadcast threshold.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from udacity_data_engineering_capstone_project_spark.functions.keys import add_surrogate_key
-from udacity_data_engineering_capstone_project_spark.operators.relational import star_left_join
 
 
 def build_dimension(
@@ -41,16 +41,3 @@ def build_dimension(
     order = list(key_order) if key_order else [c[1] if isinstance(c, tuple) else c for c in columns]
     return add_surrogate_key(out, key_name, mode="row_number", order_by=order)
 
-
-def build_fact(
-    base: DataFrame,
-    dims: Sequence[tuple[DataFrame, Sequence[Column] | Sequence[str] | Column]],
-    keep: Sequence[Column | str],
-) -> DataFrame:
-    """Assemble a fact table: left-join every dim (row-preserving,
-    reference `etl.py:285-293`), keep the surrogate keys + measures.
-
-    The planner and AQE choose each dim's join: real dims fall under
-    the broadcast threshold, a dim_person-scale dim (1:1 with the
-    fact, `etl.py:242-249`) is shuffle-joined."""
-    return star_left_join(base, dims, select=keep)

@@ -93,6 +93,9 @@ def get_spark(
         # require them.
         .config("spark.sql.session.timeZone", "UTC")
         # Dims in this workload are small; let Catalyst broadcast generously.
+        # The one broadcast ceiling: the planner, `maybe_broadcast`'s
+        # hints and the plan linter's oversized-broadcast-hint rule all
+        # read this value (`relational.broadcast_ceiling`).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # In local mode driver == executor: size the single JVM for the
         # host (default 1g OOMs immediately at any real scale). On a

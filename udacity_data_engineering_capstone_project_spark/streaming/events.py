@@ -26,7 +26,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated to us) or raw int64 nanos (legacy `nanosAsLong`
     sessions). Both paths build the instant from the raw wall-clock
     value, so epoch-us downstream is session-timezone-independent and
-    matches the batch readers (cf. `plans.queries.sessionize`).
+    matches the batch readers (cf. `plans.queries_events.sessionize`).
     """
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
@@ -110,7 +110,7 @@ def sessionized_counts(
     """Per-user session aggregation with native session windows
     (`F.session_window`): sessions close after ``gap`` inactivity.
     The stateful-streaming twin of the batch lag+running-sum
-    sessionizer (plans.queries.sessionize).
+    sessionizer (plans.queries_events.sessionize).
 
     Output: (user_id, start_us, end_us, n_events) — window bounds as
     epoch-us so results are session-timezone-independent. Note
